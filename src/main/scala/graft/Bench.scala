@@ -1,15 +1,25 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** SPARK_GRAFT_CPUS as a positive core count (default 4). The value
+    * becomes `local[n]`, the shuffle partition count and the `cpus` field
+    * of the result JSON, so anything else fails before a session starts.
+    */
+  def parseCpus(env: Option[String]): Int = env.map(_.trim) match {
+    case None => 4
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     // iteration aid: SPARK_GRAFT_ONLY=q_a,q_b benches just those keys
     // (driver runs leave it unset → full suite, behavior unchanged)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // r12 measured negative: spark.sql.join.preferSortMergeJoin=false

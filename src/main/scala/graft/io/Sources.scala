@@ -1,5 +1,6 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.model.Schemas
@@ -14,11 +15,22 @@ import graft.model.Schemas
   */
 object Sources {
 
-  /** Read a named test table from an sf dir. Schema is enforced (asserted
-    * in tests), not inferred — inference is a full extra data pass at scale.
+  /** Read a named test table from an sf dir with its declared schema
+    * (Schemas.all), never an inferred one. Handing the reader the schema
+    * is what keeps a table read free of Spark jobs: without it every read
+    * launches a one-task job just to read a footer. A given schema has a
+    * hazard inference lacks: a declared column the file does not hold
+    * reads as nulls without a word. So the files' footers are checked
+    * against the declared schema first (`requireFooterSchema`), and a
+    * mismatch fails naming the file and the column.
     */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = Schemas.all.getOrElse(name,
+      throw new IllegalArgumentException(s"no declared schema for table $name"))
+    requireFooterSchema(path, footers(spark, path), schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
@@ -27,14 +39,82 @@ object Sources {
   def part(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
+
+  /** One parquet data file's footer: its schema as Spark converts it
+    * (TIMESTAMP(NANOS) as LongType, see `events`) and the top-level
+    * columns stored as TIMESTAMP(NANOS).
+    */
+  final case class Footer(file: String, schema: StructType, nanosColumns: Set[String])
+
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[Footer]]()
+
+  /** The footers of every data file at `path` (one file, or every
+    * `*.parquet` file directly under a directory). Driver-side metadata reads only,
+    * no Spark job and no data pass. The cache key carries each file's
+    * (path, mtime, length): rewriting the data at the same path within
+    * one JVM invalidates the entry instead of replaying a stale footer.
+    */
+  def footers(spark: SparkSession, path: String): Seq[Footer] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val root = fs.getFileStatus(p)
+    val files =
+      if (root.isDirectory) {
+        val fl = fs.listStatus(p)
+          .filter(f => f.getPath.getName.endsWith(".parquet") &&
+                       !f.getPath.getName.startsWith("_"))
+          .sortBy(_.getPath.getName)
+        if (fl.isEmpty) throw new IllegalArgumentException(s"no parquet files under $path")
+        fl.toSeq
+      } else Seq(root)
+    val key = files.map(f =>
+      s"${f.getPath}@${f.getModificationTime}:${f.getLen}").mkString("|")
+    footerCache.computeIfAbsent(key, _ => {
+      import org.apache.parquet.schema.LogicalTypeAnnotation
+      // the session's conversion rules (binary-as-string, NTZ inference,
+      // ...), except that NANOS converts to LongType instead of failing
+      val sqlConf = spark.sessionState.conf.clone()
+      sqlConf.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val converter = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(sqlConf)
+      files.map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, hadoopConf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try {
+          val schema = reader.getFooter.getFileMetaData.getSchema
+          val nanos = schema.getFields.asScala.filter(_.getLogicalTypeAnnotation match {
+            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+            case _ => false
+          }).map(_.getName).toSet
+          Footer(f.getPath.toString, converter.convert(schema), nanos)
+        } finally reader.close()
+      }
+    })
+  }
+
+  /** Fail unless every file holds each `declared` column with its declared
+    * type (`schemaDrift`: names and types, nullability ignored). Columns a
+    * file holds beyond the declared ones are fine; the reader skips them.
+    */
+  private def requireFooterSchema(path: String, files: Seq[Footer], declared: StructType): Unit =
+    files.foreach { f =>
+      val drift = schemaDrift(f.schema, declared)
+      if (drift.nonEmpty) throw new IllegalStateException(
+        s"parquet file ${f.file} does not match the schema declared for $path: " +
+          drift.mkString("; "))
+    }
+
   /** events.ts physical-unit handling. Across driver rounds the test
     * generator has shipped events.ts BOTH as parquet INT64
     * TIMESTAMP(NANOS) — which Spark has no type for and refuses by
     * default — and as plain TIMESTAMP(MICROS). Hardcoding either unit
     * misreads the other by 1000× SILENTLY (the raw longs parse fine and
-    * every date lands in Jan 1970), so the reader sniffs ONE parquet
-    * footer per path (a driver-side metadata read, no data pass; cached)
-    * and picks the plan:
+    * every date lands in Jan 1970), so the reader takes the unit from the
+    * footers (`footers`, the same cached read that checks the schema) and
+    * picks the plan:
     *
     *  - NANOS: force ts to LongType (the nanos-as-long reader option is
     *    scoped to this relation, not the session), then truncate with
@@ -56,65 +136,33 @@ object Sources {
   /** The ns→us ts normalization (DuckDB-identical integer DIV). */
   val eventsTsNormalization: String = "CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"
 
-  private val tsNanosCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** True iff the events parquet at `path` stores ts as TIMESTAMP(NANOS).
-    * Footer reads only (driver-side metadata, no data pass). ALL data files
-    * under a directory are sniffed and must agree — a mixed-unit directory
-    * would otherwise have its remaining files silently misread by 1000×, so
-    * disagreement fails loudly here. The cache key carries each file's
-    * (mtime, length): regenerating the data at the same path within one JVM
-    * invalidates the entry instead of silently replaying the stale plan.
+  /** True iff the events `files` store ts as TIMESTAMP(NANOS). ALL data
+    * files under a directory must agree — a mixed-unit directory would
+    * otherwise have its remaining files silently misread by 1000×, so
+    * disagreement fails loudly here.
     */
-  def eventsTsIsNanos(spark: SparkSession, path: String): Boolean = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val root = fs.getFileStatus(p)
-    val files =
-      if (root.isDirectory) {
-        val fl = fs.listStatus(p)
-          .filter(f => f.getPath.getName.endsWith(".parquet") &&
-                       !f.getPath.getName.startsWith("_"))
-          .sortBy(_.getPath.getName)
-        if (fl.isEmpty) throw new IllegalArgumentException(s"no parquet files under $path")
-        fl.toSeq
-      } else Seq(root)
-    val key = files.map(f =>
-      s"${f.getPath}@${f.getModificationTime}:${f.getLen}").mkString("|")
-    tsNanosCache.computeIfAbsent(key, _ => {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      def fileIsNanos(file: org.apache.hadoop.fs.Path): Boolean = {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val schema = reader.getFooter.getFileMetaData.getSchema
-          schema.containsField("ts") &&
-            (schema.getType(Seq("ts"): _*).getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            })
-        } finally reader.close()
-      }
-      val units = files.map(f => f.getPath -> fileIsNanos(f.getPath))
-      val distinct = units.map(_._2).distinct
-      require(distinct.size == 1,
-        s"mixed ts timestamp units across parquet files at $path: " +
-          units.map { case (f, n) => s"${f.getName}=${if (n) "NANOS" else "MICROS"}" }
-            .mkString(", "))
-      distinct.head
-    })
+  private def tsIsNanos(path: String, files: Seq[Footer]): Boolean = {
+    val units = files.map(f => f.file -> f.nanosColumns("ts"))
+    val distinct = units.map(_._2).distinct
+    require(distinct.size == 1,
+      s"mixed ts timestamp units across parquet files at $path: " +
+        units.map { case (f, n) => s"${f.split('/').last}=${if (n) "NANOS" else "MICROS"}" }
+          .mkString(", "))
+    distinct.head
   }
 
   /** The (forced schema, ts-normalization SQL) pair for an events source
-    * at `path` — shared by the batch reader and the readStream twin so
-    * the two can't drift.
+    * at `path`, checked against its footers — shared by the batch reader
+    * and the readStream twin so the two can't drift.
     */
-  def eventsReadPlan(spark: SparkSession, path: String): (StructType, String) =
-    if (eventsTsIsNanos(spark, path)) (eventsRawSchema, eventsTsNormalization)
-    else (Schemas.events, "CAST(ts AS TIMESTAMP_NTZ)")
+  def eventsReadPlan(spark: SparkSession, path: String): (StructType, String) = {
+    val files = footers(spark, path)
+    val plan =
+      if (tsIsNanos(path, files)) (eventsRawSchema, eventsTsNormalization)
+      else (Schemas.events, "CAST(ts AS TIMESTAMP_NTZ)")
+    requireFooterSchema(path, files, plan._1)
+    plan
+  }
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     val (schema, norm) = eventsReadPlan(spark, s"$dir/events.parquet")
@@ -230,10 +278,13 @@ object Sources {
   /** Verify a loaded table matches the expected schema (names + types,
     * ignoring nullability). Returns mismatches; empty = ok.
     */
-  def schemaDrift(df: DataFrame, expected: StructType): Seq[String] = {
-    val actual = df.schema.map(f => f.name -> f.dataType.simpleString).toMap
+  def schemaDrift(df: DataFrame, expected: StructType): Seq[String] =
+    schemaDrift(df.schema, expected)
+
+  def schemaDrift(actual: StructType, expected: StructType): Seq[String] = {
+    val types = actual.map(f => f.name -> f.dataType.simpleString).toMap
     expected.flatMap { f =>
-      actual.get(f.name) match {
+      types.get(f.name) match {
         case None => Some(s"missing column ${f.name}")
         case Some(t) if t != f.dataType.simpleString =>
           Some(s"${f.name}: expected ${f.dataType.simpleString}, got $t")

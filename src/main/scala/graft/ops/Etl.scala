@@ -177,6 +177,16 @@ object Etl {
     tmp.getAbsolutePath
   }
 
+  /** The schema of the layout `partitionedOrdersPath` writes: orders plus
+    * the `o_month` partition column. Reading with it launches no
+    * schema-inference job and keeps `o_month` a string.
+    */
+  private val partitionedOrdersSchema =
+    Schemas.orders.add("o_month", org.apache.spark.sql.types.StringType)
+
+  private def readPartitionedOrders(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(partitionedOrdersSchema).parquet(partitionedOrdersPath(spark, dir))
+
   /** q_partition_prune: partitioned-layout roundtrip + PRUNED read — write
     * orders hive-partitioned by month, read back with a month-range
     * predicate that resolves against directory names only (PartitionFilters
@@ -188,7 +198,7 @@ object Etl {
     * the partitioned layout lossless AND the pruned read correct.
     */
   def partitionPrune(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(partitionedOrdersPath(spark, dir))
+    readPartitionedOrders(spark, dir)
       .filter(col("o_month").between("1996-01", "1996-03"))
       .groupBy(col("o_month"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), moneySum(col("o_totalprice")).as("sum_price"))
@@ -204,7 +214,7 @@ object Etl {
     * invisible, only the files-read change.
     */
   def partitionDpp(spark: SparkSession, dir: String): DataFrame = {
-    val fact = spark.read.parquet(partitionedOrdersPath(spark, dir))
+    val fact = readPartitionedOrders(spark, dir)
     val dim = fact.select(col("o_month")).distinct()
       .withColumn("yr", substring(col("o_month"), 1, 4))
       .withColumn("q1", substring(col("o_month"), 6, 2).isin("01", "02", "03"))

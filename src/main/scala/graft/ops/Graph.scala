@@ -121,20 +121,22 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 5, damping: Double = 0.85,
                checkpointEvery: Int = 0): DataFrame = {
-    // r12 opt (guide §2.4 — remove shuffles outright): every loop-invariant
-    // frame is materialized ALREADY hash-partitioned on its per-round join
-    // key (localCheckpoint preserves the partitioning), and each round's
-    // output comes out of a join on `id`, so round t+1's `e ⋈ ranks` and
-    // `nodes ⋈ contribs` reuse existing partitioning instead of
-    // re-exchanging both sides every round — the per-round exchanges drop
-    // from 3-data-sided to ONE (the contribs groupBy), plan-verified in
-    // plans/r12/q_pagerank_{before,after}.txt.
+    // Every loop-invariant frame is hash-partitioned on its per-round join
+    // key before it is checkpointed, but localCheckpoint does NOT carry
+    // that partitioning into the plan: a checkpointed frame plans as
+    // `Scan ExistingRDD`, so every round re-plans
+    // `Scan ExistingRDD[src,dst]` -> `Exchange hashpartitioning(src, n)`,
+    // and likewise for the node and degree frames (see the planned
+    // q_pagerank query). Only exchange reuse keeps the rounds cheap: these
+    // exchanges are identical in every round, so AQE runs each once and
+    // later rounds read it as a `ReusedExchange`. The one new shuffle per
+    // round is the contribs groupBy on `dst`.
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       // ONE exchange: hash by src, then dedup (src-clustering satisfies
-      // the (src,dst) aggregate, so no second exchange) — output stays
-      // partitioned by src for every round's join AND the outdeg census
+      // the (src,dst) aggregate, so no second exchange); the plans that
+      // read the checkpoint still exchange by src (see above)
       .repartition(col("src"))
       .dropDuplicates("src", "dst")
       .localCheckpoint(eager = false) // lazy r12: the single pipelined rank job materializes all three

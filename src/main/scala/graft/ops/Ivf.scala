@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.Det.r6
 
 /** IVF (inverted-file) approximate nearest neighbour — the clustering
@@ -230,10 +231,17 @@ object Ivf {
     * (partition pruning at planning time — asserted in IvfSpec). At
     * cluster scale this is the same layout FAISS shards by inverted
     * list; here it's plain hive-partitioned parquet, so EVERY Spark
-    * reader prunes it with no custom code.
+    * reader prunes it with no custom code. The files hold exactly
+    * `indexSchema`'s columns, so `searchPartitioned` reads them with that
+    * schema and launches no schema-inference job.
     */
   def writeIndex(indexed: DataFrame, path: String): Unit =
-    indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
+    indexed.select(indexSchema.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** The on-disk index: the embeddings columns plus the `cell` partition. */
+  val indexSchema: StructType =
+    graft.model.Schemas.embeddings.add("cell", IntegerType)
 
   /** Search against the MATERIALIZED index: identical semantics to
     * [[search]], but candidates come from `IN (probed cells)` on the
@@ -248,7 +256,7 @@ object Ivf {
     val probeCells = assignCellsMulti(probes, centroids, nprobe)
     val cells = probeCells.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted // bounded: <= #centroids
-    val indexed = spark.read.parquet(indexPath)
+    val indexed = spark.read.schema(indexSchema).parquet(indexPath)
       .filter(col("cell").isin(cells.map(Int.box): _*))
     val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id"))
     indexed.join(broadcast(probeCells), Seq("cell"))

@@ -143,10 +143,14 @@ object Stats {
     // that small basket frame, and derive EVERYTHING from it — n_orders
     // is its row count (1-row agg), item counts re-explode it (per-order
     // sets ⇒ count per part = #orders containing it), pairs as before.
+    // A line with no part key joins no basket, but its order still counts
+    // in n_orders (the oracle's COUNT(DISTINCT l_orderkey)): the null part
+    // keys are filtered inside the aggregate, not by a row filter that
+    // would drop the order too. collect_set would skip them silently.
     val perOrder = Sources.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
       .groupBy(col("l_orderkey"))
-      .agg(array_sort(collect_set(col("l_partkey"))).as("parts"))
+      .agg(array_sort(expr("collect_set(l_partkey) FILTER (WHERE l_partkey IS NOT NULL)")).as("parts"))
       .localCheckpoint(eager = false) // 3 consumers; the one final job materializes it
     val nOrders = perOrder.agg(count(lit(1)).as("n_orders"))
     val itemCounts = perOrder.select(explode(col("parts")).as("l_partkey"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.Det._
 import graft.io.Sources
 
@@ -146,8 +147,7 @@ object Streaming {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val base = sys.props("java.io.tmpdir") + s"/${prefix}_$tag"
     val sink = s"$base/sink"
-    val marker = s"graft.$markerName.done.$tag"
-    if (!spark.conf.getOption(marker).contains("true")) {
+    val schema = runOnce(spark, s"graft.$markerName.done.$tag") {
       val p = new org.apache.hadoop.fs.Path(base)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true)
@@ -169,10 +169,24 @@ object Streaming {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
-      spark.conf.set(marker, "true")
+      agg.schema
     }
-    spark.read.parquet(sink)
+    spark.read.schema(schema).parquet(sink)
   }
+
+  /** Run-once marker of the `*_exec` keys: `run` executes on the first
+    * call per session and returns the schema of the files it wrote; the
+    * marker (a session conf) keeps that schema, so every call reads the
+    * files back with it and launches no schema-inference job.
+    */
+  private def runOnce(spark: SparkSession, marker: String)(run: => StructType): StructType =
+    spark.conf.getOption(marker) match {
+      case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
+      case None =>
+        val schema = run
+        spark.conf.set(marker, schema.json)
+        schema
+    }
 
   /** q_stream_join_exec: a REAL stream-stream join execution under the
     * hash gate — the symmetric-hash-join state engine itself, the third
@@ -330,9 +344,8 @@ object Streaming {
     import graft.Det.cents
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val base = sys.props("java.io.tmpdir") + s"/graft_stream_cdc_$tag"
-    val marker = s"graft.streamCdcExec.done.$tag"
     val table = s"$base/table"
-    if (!spark.conf.getOption(marker).contains("true")) {
+    val schema = runOnce(spark, s"graft.streamCdcExec.done.$tag") {
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(bp)) fs.delete(bp, true)
@@ -362,9 +375,9 @@ object Streaming {
       try {
         q.processAllAvailable()
       } finally q.stop()
-      spark.conf.set(marker, "true")
+      changes.head._2.schema
     }
-    spark.read.parquet(table)
+    spark.read.schema(schema).parquet(table)
       .select(col("k"), col("pri"), col("cents"), col("seq"))
       .orderBy(col("k"))
   }
@@ -405,9 +418,8 @@ object Streaming {
   def streamUpdateExec(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val base = sys.props("java.io.tmpdir") + s"/graft_stream_update_$tag"
-    val marker = s"graft.streamUpdateExec.done.$tag"
     val table = s"$base/table"
-    if (!spark.conf.getOption(marker).contains("true")) {
+    val schema = runOnce(spark, s"graft.streamUpdateExec.done.$tag") {
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(bp)) fs.delete(bp, true)
@@ -416,12 +428,13 @@ object Streaming {
                 col("event_type"), col("value"))
       val src = stageTimeOrderedTerciles(spark, ev, base, fs)
         .withWatermark("ts", "0 seconds")
+      val agg = tumblingOn(src)
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(providerKey)
       spark.conf.set(providerKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {
-        val q = tumblingOn(src).writeStream
+        val q = agg.writeStream
           .option("checkpointLocation", s"$base/ckpt")
           .outputMode("update")
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -429,7 +442,8 @@ object Streaming {
               val spark0 = batch.sparkSession
               val p = new org.apache.hadoop.fs.Path(table)
               val tfs = p.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-              val target = if (tfs.exists(p)) spark0.read.parquet(table) else batch.limit(0)
+              val target =
+                if (tfs.exists(p)) spark0.read.schema(batch.schema).parquet(table) else batch.limit(0)
               graft.io.Sinks.atomicOverwrite(
                 Merge.upsert(target, batch, Seq("win_us", "event_type")), table)
             }
@@ -442,9 +456,9 @@ object Streaming {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
-      spark.conf.set(marker, "true")
+      agg.schema
     }
-    spark.read.parquet(table)
+    spark.read.schema(schema).parquet(table)
       .select(col("win_us"), col("event_type"), col("n"), col("sum_value"))
       .orderBy(col("win_us"), col("event_type"))
   }
@@ -1033,7 +1047,8 @@ object Streaming {
           .filter(col("__rn") === 1).drop("__rn")
         val p = new org.apache.hadoop.fs.Path(tablePath)
         val fs = p.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-        val target = if (fs.exists(p)) spark0.read.parquet(tablePath) else latest.limit(0)
+        val target =
+          if (fs.exists(p)) spark0.read.schema(latest.schema).parquet(tablePath) else latest.limit(0)
         // materialization order is safe: the merge plan reads the CURRENT
         // table files while atomicOverwrite writes the staging dir; the
         // rename happens only after the staged write completes

@@ -12,6 +12,16 @@ class ContractSpec extends AnyFunSuite with SparkFixture {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
   }
 
+  test("SPARK_GRAFT_CPUS parses to a positive core count or fails fast") {
+    assert(Bench.parseCpus(None) === 4)
+    assert(Bench.parseCpus(Some("8")) === 8)
+    assert(Bench.parseCpus(Some(" 32 ")) === 32)
+    Seq("", "0", "-2", "4.5", "eight", "local[4]").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
+
   test("every key follows the q_ naming convention") {
     assert(SparkEntry.queries.keySet.forall(_.startsWith("q_")))
   }

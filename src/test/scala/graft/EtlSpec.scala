@@ -33,7 +33,11 @@ class EtlSpec extends AnyFunSuite with SparkFixture {
     val df = spark.range(3).select(col("id").as("l_orderkey"))
     val drift = Sources.schemaDrift(df, Schemas.lineitem)
     assert(drift.exists(_.contains("missing column l_partkey")))
-    assert(Sources.schemaDrift(Sources.lineitem(spark, sfDir), Schemas.lineitem).isEmpty)
+    // a read with the declared schema reports that schema whatever the
+    // file holds, so the fixture is checked at the footer
+    val files = Sources.footers(spark, s"$sfDir/lineitem.parquet")
+    assert(files.nonEmpty)
+    files.foreach(f => assert(Sources.schemaDrift(f.schema, Schemas.lineitem).isEmpty, f.file))
   }
 
   test("events source: nanosecond timestamps become microsecond TimestampType") {

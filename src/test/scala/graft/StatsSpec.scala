@@ -71,6 +71,29 @@ class StatsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("market basket: a line without a part key joins no basket, but its order still counts") {
+    val li = graft.io.Sources.lineitem(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_basket_nulls").toString
+    val nullPart = lit(null).cast("bigint")
+    // a null-part line on every 7th order, and one new order holding only such a line
+    val extra = li.filter(col("l_orderkey") % 7 === 0).dropDuplicates("l_orderkey")
+      .withColumn("l_partkey", nullPart)
+    val newKey = li.agg(max(col("l_orderkey"))).first().getLong(0) + 1
+    val lone = li.limit(1).withColumn("l_orderkey", lit(newKey)).withColumn("l_partkey", nullPart)
+    li.unionByName(extra).unionByName(lone).write.parquet(s"$dir/lineitem.parquet")
+    val base = Stats.marketBasket(spark, sfDir).collect()
+    val withNulls = Stats.marketBasket(spark, dir).collect()
+    def counts(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+    assert(base.nonEmpty)
+    assert(counts(withNulls) === counts(base))
+    // the lone order counts in n_orders, so every lift scales by (n+1)/n
+    val n = li.select("l_orderkey").distinct().count().toDouble
+    withNulls.zip(base).foreach { case (w, b) =>
+      assert(math.abs(w.getDouble(5) - b.getDouble(5) * (n + 1) / n) < 1e-5)
+    }
+  }
+
   test("market basket: HOF pair generation == self-join pair generation") {
     val b = graft.io.Sources.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey")).distinct()

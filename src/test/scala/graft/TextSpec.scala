@@ -305,10 +305,10 @@ class TextSpec extends AnyFunSuite with SparkFixture {
     val span = "abcdefghijklmnopqrstuvwxyz0123456789!" // 37 chars
     require(span.length == 37)
     val docs = Seq(
-      (1L, "en", ("U" * 50) + span + ("V" * 50), 137L),
-      (2L, "en", ("X" * 61) + span + ("Y" * 40), 138L),
-      (3L, "en", "Z" * 140, 140L))
-      .toDF("doc_id", "lang", "text", "n_chars")
+      (1L, "en", ("U" * 50) + span + ("V" * 50), "web", 137L),
+      (2L, "en", ("X" * 61) + span + ("Y" * 40), "web", 138L),
+      (3L, "en", "Z" * 140, "web", 140L))
+      .toDF("doc_id", "lang", "text", "source", "n_chars")
     val tmp = java.nio.file.Files.createTempDirectory("winnow_docs")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val flagged = Text.dedupSubstringWinnowQuery(spark, tmp.toString)
