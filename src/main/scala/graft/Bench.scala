@@ -1,34 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** SPARK_GRAFT_CPUS as a positive core count (default 4). The value
-    * becomes `local[n]`, the shuffle partition count and the `cpus` field
-    * of the result JSON, so anything else fails before a session starts.
-    */
-  def parseCpus(env: Option[String]): Int = env.map(_.trim) match {
-    case None => 4
-    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+    val cpus = Session.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     // iteration aid: SPARK_GRAFT_ONLY=q_a,q_b benches just those keys
     // (driver runs leave it unset → full suite, behavior unchanged)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r12 measured negative: spark.sql.join.preferSortMergeJoin=false
-      // (guide §9's shuffled-hash suggestion) benched 180.3 s vs 161.5 s
-      // for the identical tree in adjacent full-suite runs — no key
-      // improved beyond the noise band while several join-heavy keys
-      // regressed; reverted to the engine default (sort-merge).
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // r12 measured negative: spark.sql.join.preferSortMergeJoin=false
+    // (guide §9's shuffled-hash suggestion) benched 180.3 s vs 161.5 s
+    // for the identical tree in adjacent full-suite runs — no key
+    // improved beyond the noise band while several join-heavy keys
+    // regressed; the session keeps the engine default (sort-merge).
+    val spark = Session.local(cpus)
     // untimed steady-state warm-up: one full pass over every query first —
     // JIT compilation, whole-stage-codegen class generation, parquet footer
     // caches and shuffle machinery all spin up here, so the timed pass
@@ -53,13 +36,6 @@ object Bench {
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // keys whose first call executes the real job (session-conf marker
-    // pattern); keep in sync when adding a *_exec key or run-once verb
-    val runOnce = Set(
-      "q_stream_exec", "q_stream_session_exec", "q_stream_join_exec",
-      "q_stream_dedup_exec", "q_stream_sliding_exec", "q_stream_asof_exec",
-      "q_stream_cdc_exec", "q_stream_update_exec", "q_stream_tws_exec",
-      "q_incremental_view")
     // two timed passes, min per query: local-machine contention adds
     // ±15-20% noise to any single pass; the min is the steady-state cost.
     // A failing query must NOT pass off its elapsed-to-failure time as a
@@ -94,7 +70,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val fails = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val firsts = firstRun.filter { case (k, _) => runOnce(k) }.toSeq.sortBy(_._1)
+    val firsts = firstRun.filter { case (k, _) => SparkEntry.runOnce(k) }.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     val line =

@@ -42,8 +42,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * GROUP-FILE FORMAT — measured decision (round 7). Group files are
   * ROW-oriented (length-prefixed UnsafeRows). The columnar alternative
-  * was A/B'd honestly (graft.tools.GroupFormatAB — lineitem, min-of-3
-  * per run, best of 3 runs on a shared box, local[32], sf1 = 6M rows):
+  * was A/B'd honestly (a since-deleted A/B tool — lineitem, min-of-3
+  * per run, best of 3 runs on a shared box, local[32], sf1 = 6M rows;
+  * GroupFormatABSpec pins that both formats answer its three shapes
+  * identically):
   *
   *   shape            | rows s | parquet s | parquet speedup
   *   wide (all cols)  |  0.128 |   0.111   | ~1x (row format competitive)

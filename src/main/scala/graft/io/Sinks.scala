@@ -16,14 +16,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sinks {
 
-  /** TRUNCATE + reload analogue: full overwrite of a parquet table. */
-  def overwriteParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** Append (INSERT) to a parquet table. */
-  def appendParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
   /** CSV export with header — COPY TO analogue. `encoding` accepts a PG
     * codec name or Java charset (same registry as the reader side).
     */

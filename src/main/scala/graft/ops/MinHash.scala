@@ -115,25 +115,14 @@ object MinHash {
     * PERF TRAP: this one-shot composition inlines the hash-array subtree
     * into ALL k components of a single projection (higher-order functions
     * are CodegenFallback, so no subexpression elimination rescues it) —
-    * fine for bounded/test inputs, but production paths MUST stage the
-    * two projections themselves: .select(md5Hashes(...).as("hs"))
-    * .select(md5SignatureFromHashes(col("hs"), k)) — as
-    * Text.lshScoredCandidates and Text.dedupMinhashQuery do.
+    * fine for bounded/test inputs; a corpus-scale caller stages the two
+    * projections itself: .select(md5Hashes(...).as("hs"))
+    * .select(md5SignatureFromHashes(col("hs"), k)). Production dedup
+    * (Text.lshScoredCandidates, Text.dedupMinhashQuery) uses the fused
+    * md5SignatureFromTextNative below instead.
     */
   def md5Signature(shingleArr: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
     md5SignatureFromHashes(md5Hashes(shingleArr, k), k)
-
-  /** NATIVE form of [[md5Signature]] — graft.functions.Md5MinHashSignature,
-    * a single fused codegen'd pass (no intermediate hex strings, int-compare
-    * minima). Bit-identical output to the HOF chain (property-tested in
-    * MinHashSpec); production dedup paths (Text.lshScoredCandidates,
-    * Text.dedupMinhashQuery) use THIS; the HOF pair above stays as the
-    * portable executable spec the oracle SQL mirrors.
-    */
-  def md5SignatureNative(shingleArr: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.Md5MinHashSignature(
-        org.apache.spark.sql.graftbridge.Bridge.expression(shingleArr), k))
 
   /** Fully fused text → w-shingle → signature (graft.functions.
     * Md5MinHashFromText): no token array, no shingle strings, no distinct.

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,12 +9,13 @@ import org.apache.spark.sql.types._
   * BINARY columns with typed metadata, processed per-partition in bounded
   * batches.
   *
-  * The actual codecs are NOT available in this environment, so the decode
-  * kernels are clearly-marked deterministic STUBS (byte-derived fakes) —
-  * but the Spark-side architecture is real and tested: schema, partition
-  * iteration, batch shape, and the mapPartitions exchange contract are
-  * exactly what a JNI/FFI decoder would plug into (the Scala analogue of a
-  * pandas_udf/mapInPandas batch kernel).
+  * graft ships no codecs, so nothing decodes pixels or samples.
+  * What runs for real is what plain container bytes carry: header
+  * dimensions, rates and EXIF orientation (sniffHeader, mediaMetadata),
+  * and content-addressed dedup of the payload (dedupMedia). The
+  * mapPartitions kernel shape of mediaMetadata is the one a JNI/FFI
+  * decoder would plug into (the Scala analogue of a mapInPandas batch
+  * kernel).
   */
 object Multimodal {
 
@@ -29,15 +30,6 @@ object Multimodal {
       StructField("bytes", LongType))), nullable = false),
   ))
 
-  val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType),
-    StructField("feature", ArrayType(FloatType)),
-  ))
-
   /** Build a deterministic synthetic media table from the documents table
     * (payload = UTF-8 text bytes) — gives the pipeline real binary columns
     * without external fixtures.
@@ -50,74 +42,6 @@ object Multimodal {
       encode(col("text"), "UTF-8").as("content"),
       struct(col("source").as("source"), lit("application/octet-stream").as("mime"),
              col("n_chars").as("bytes")).as("meta"))
-
-  /** Real file-system media ingestion: Spark's binaryFile source reads a
-    * directory tree of opaque files as (path, modificationTime, length,
-    * content BINARY) rows — the actual 100 TB media-lake entry point
-    * (each file becomes one row; splits are per-file, so partition count
-    * tracks file count and `pathGlobFilter` prunes by extension at
-    * listing time, before any byte is read). The result feeds the same
-    * content-addressed dedup / decode-kernel plumbing as syntheticMedia:
-    * media_id = xxhash64(path) (deterministic from the lake layout),
-    * metadata carried alongside the payload exactly like `mediaSchema`.
-    */
-  def readMediaDir(spark: SparkSession, path: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(path)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        regexp_extract(col("path"), "\\.([A-Za-z0-9]+)$", 1).as("kind"),
-        col("content"),
-        struct(col("path").as("source"), lit("application/octet-stream").as("mime"),
-               col("length").as("bytes")).as("meta"))
-
-  /** Decode kernel: dimensions come from the REAL header parsers below
-    * (sniffHeader — PNG/JPEG/GIF/BMP/MP4 all carry their dimensions in
-    * plain container bytes, no codec needed). Only when the payload has
-    * no parseable header (synthetic text-byte media, truncated files)
-    * does the byte-hash STUB fallback fire — clearly marked, exactly the
-    * quarantine-vs-fake decision a real pipeline makes for unparseable
-    * media. The embedding is a deterministic STUB (8 byte-moment
-    * channels): real model inference is environment-blocked here; a JNI/
-    * FFI model runner would plug into this same per-partition kernel.
-    */
-  private def decodeStub(content: Array[Byte], kind: String): (Int, Int, Int, Array[Float]) = {
-    val (_, w, h, _, _) = sniffHeader(content)
-    val hsh = java.util.Arrays.hashCode(content)
-    val width = w.getOrElse(64 + math.abs(hsh % 1024))           // STUB fallback: no header
-    val height = h.getOrElse(64 + math.abs((hsh / 1024) % 1024)) // STUB fallback: no header
-    val frames = if (kind == "video") 1 + math.abs(hsh % 120) else 1
-    // STUB embedding: 8 moments of the payload bytes (see scaladoc)
-    val feat = new Array[Float](8)
-    var i = 0
-    while (i < content.length) { feat(i % 8) += (content(i) & 0xFF) / 255.0f; i += 1 }
-    (width, height, frames, feat)
-  }
-
-  /** Decode + featurize: partition-batched kernel over the binary column.
-    * The mapPartitions iterator shape keeps one decoder per partition and
-    * never materializes more than one row's payload at a time.
-    */
-  def decodeFeatures(media: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(featureSchema)
-    media.select("media_id", "kind", "content").mapPartitions { it =>
-      // per-partition decoder init would go here (codec handle, model…)
-      it.map { r =>
-        val (w, h, f, feat) = decodeStub(r.getAs[Array[Byte]]("content"), r.getString(1))
-        Row(r.getLong(0), r.getString(1), w, h, f, feat.toSeq)
-      }
-    }(enc)
-  }
-
-  /** Frame sampling plan for video rows: every `stride`-th frame index —
-    * pure column math on the decoded frame count (no payload touched).
-    */
-  def sampleFrames(features: DataFrame, stride: Int): DataFrame =
-    features.filter(col("kind") === "video")
-      .withColumn("sampled_frames",
-        filter(sequence(lit(0), col("n_frames") - 1), i => pmod(i, lit(stride)) === 0))
-      .withColumn("n_sampled", size(col("sampled_frames")))
 
   /** Content-addressed exact dedup of binary media — REAL, not stubbed:
     * md5 over the payload bytes (Spark's md5 accepts binary directly, no
@@ -147,8 +71,8 @@ object Multimodal {
   /** REAL media header parsing — NOT a stub. Container headers are plain
     * bytes; no codec library is needed to read dimensions/rates out of
     * them, so this part of the "decode" story runs for real even in this
-    * codec-less environment (full pixel/sample decode stays env-blocked
-    * in decodeStub). Formats: PNG (IHDR), JPEG (SOF0/1/2 marker scan),
+    * codec-less environment (full pixel/sample decode stays env-blocked).
+    * Formats: PNG (IHDR), JPEG (SOF0/1/2 marker scan),
     * GIF (87a/89a logical screen), BMP (BITMAPINFOHEADER), WAV (RIFF fmt
     * chunk scan), MP4/ISO-BMFF (ftyp gate + moov>trak>tkhd box walk,
     * 16.16 fixed-point dims — ISO 14496-12), MP3 (ID3v2 syncsafe skip +
@@ -504,9 +428,8 @@ object Multimodal {
     StructField("sample_rate", IntegerType),
     StructField("channels", IntegerType)))
 
-  /** Header metadata over a media frame — the same partition-batched
-    * kernel contract as decodeFeatures, but the kernel is REAL (pure-JVM
-    * byte parsing). At 100 TB this is the first pass of media triage:
+  /** Header metadata over a media frame — a partition-batched kernel
+    * that is REAL (pure-JVM byte parsing). At 100 TB this is the first pass of media triage:
     * format census, dimension filters, corrupt-file quarantine — all
     * without a decoder in the loop.
     */
@@ -522,33 +445,4 @@ object Multimodal {
       }
     }(enc)
   }
-
-  /** Resize PLANNING (the real, declarative half of image resize): fit
-    * each media's decoded (width, height) into a target box preserving
-    * aspect ratio — scale = min(box/w, box/h) capped at 1 (never
-    * upscale), output dims = round(dim·scale) clamped to >= 1. Pure
-    * column math over the features table; the pixel resampling itself
-    * belongs in the partition-batched decode kernel (decodeFeatures) and
-    * is codec-blocked in this environment like the decoders. A training
-    * pipeline runs exactly this split: plan dims declaratively (joinable,
-    * auditable), resample inside the batch kernel.
-    */
-  def resizePlan(features: DataFrame, box: Int): DataFrame = {
-    val scale = least(lit(1.0), least(lit(box) / col("width"), lit(box) / col("height")))
-    features
-      .withColumn("scale", scale)
-      .withColumn("out_width", greatest(lit(1), round(col("width") * col("scale")).cast("int")))
-      .withColumn("out_height", greatest(lit(1), round(col("height") * col("scale")).cast("int")))
-  }
-
-  /** Vision-token budget per media row (pure column math over decoded
-    * dimensions): ceil(w/p)·ceil(h/p) patches per frame × frames — the
-    * packing/costing primitive a multimodal training pipeline runs before
-    * batching. No payload access; runs on the features table.
-    */
-  def visionTokenBudget(features: DataFrame, patch: Int = 14): DataFrame =
-    features.withColumn("n_vision_tokens",
-      (ceil(col("width").cast("double") / patch) *
-       ceil(col("height").cast("double") / patch) *
-       coalesce(col("n_frames"), lit(1))).cast("long"))
 }

@@ -15,9 +15,6 @@ import graft.io.Sources
   */
 object Pipeline {
 
-  final case class CorpusStats(
-      input: Long, afterQuality: Long, afterExactDedup: Long, afterNearDedup: Long)
-
   /** Quality gate → exact dedup → MinHash near-dup removal. Returns the
     * cleaned corpus with quality/language/token annotations attached.
     */
@@ -36,23 +33,6 @@ object Pipeline {
       .select(col("id_b").as("doc_id")).distinct()
     exact.join(dupIds, Seq("doc_id"), "left_anti")
   }
-
-  /** Stage-by-stage row counts (each count is a separate job; use for
-    * audits, not in the hot path).
-    */
-  def corpusStats(docs: DataFrame, minQuality: Double = 0.3,
-                  nearDupEstimate: Double = 0.9): CorpusStats = {
-    val annotated = Text.tokenCounts(
-      Text.languageId(Text.qualityScore(docs, "text"), "text"), "text")
-    val gated = annotated.filter(col("quality") >= minQuality)
-    val exact = Text.exactDedup(gated, "text", "doc_id")
-    val cleaned = prepareCorpus(docs, minQuality, nearDupEstimate)
-    CorpusStats(docs.count(), gated.count(), exact.count(), cleaned.count())
-  }
-
-  /** Convenience entry over the test corpus. */
-  def prepareDocuments(spark: SparkSession, dir: String): DataFrame =
-    prepareCorpus(Sources.documents(spark, dir))
 
   /** q_pipeline_corpus: the oracle-exact pipeline twin — quality gate →
     * exact dedup (keep min doc_id per content hash) → EXACT n-gram-Jaccard

@@ -404,17 +404,6 @@ object Relational {
       .orderBy(col("month_start"))
   }
 
-  /** §2 D API-only: approximate distinct (HLL). Not oracle-declared
-    * (approximate); tolerance-tested in ScalaTest. At 100 TB this replaces
-    * exact countDistinct wherever a small rsd is acceptable — constant
-    * memory per group instead of a distinct-state blowup.
-    */
-  def approxDistinctSuppliers(spark: SparkSession, dir: String, rsd: Double = 0.05): DataFrame =
-    Sources.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(approx_count_distinct(col("l_suppkey"), rsd).as("n_supp_approx"))
-      .orderBy(col("l_returnflag"))
-
   /** q_agg_bitwise: bitwise AND/OR/XOR aggregates — bitmap/flag rollups
     * (permission masks, feature flags) in one hash aggregate.
     */

@@ -24,22 +24,12 @@ object Scale {
       .saveAsTable(table)
   }
 
-  /** Salted join for skewed keys: the skewed (large) side gets a random-
-    * but-deterministic salt in [0, salt); the small side is exploded to
-    * all salt values. Spreads one hot key over `salt` reducers. AQE's
-    * skew-join handles moderate skew automatically; salting is for the
-    * pathological hot-key case (one key ≫ a partition).
-    */
-  def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-                 salt: Int, joinType: String = "inner"): DataFrame = {
-    val l = large.withColumn("__salt", pmod(xxhash64(monotonically_increasing_id()), lit(salt)))
-    val s = small.withColumn("__salt", explode(sequence(lit(0), lit(salt - 1))))
-      .withColumn("__salt", col("__salt").cast("long"))
-    l.join(s, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
-  /** Deterministic variant for tests/replayability: salt derived from a
-    * unique column instead of row position.
+  /** Salted join for skewed keys: the skewed (large) side gets a salt in
+    * [0, salt) derived from a unique column (deterministic, so replays and
+    * the oracle agree); the small side is exploded to all salt values.
+    * Spreads one hot key over `salt` reducers. AQE's skew join handles
+    * moderate skew automatically; salting is for the pathological hot-key
+    * case (one key ≫ a partition).
     */
   def saltedJoinBy(large: DataFrame, small: DataFrame, key: String,
                    saltFrom: Column, salt: Int): DataFrame = {
@@ -48,12 +38,6 @@ object Scale {
       .withColumn("__salt", col("__salt").cast("long"))
     l.join(s, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Repartition-and-sort-within for co-located downstream consumers —
-    * one explicit shuffle now, zero for every keyed consumer after.
-    */
-  def coPartition(df: DataFrame, key: String, partitions: Int): DataFrame =
-    df.repartition(partitions, col(key)).sortWithinPartitions(col(key))
 
   /** Deterministic hash sample: keep a row iff xxhash64(key) mod N falls
     * under fraction·N. Unlike df.sample, this is stable across runs,

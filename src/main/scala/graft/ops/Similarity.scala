@@ -168,18 +168,6 @@ object Similarity {
 
   // ---------- API-only operators (north star; ScalaTest-covered) ----------
 
-  /** Brute-force cosine top-k for an arbitrary probe set (the baseline
-    * ANN). Returns (probe_id, vec_id, sim, rn≤k).
-    */
-  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id"))
-    corpus.crossJoin(broadcast(probes))
-      .select(col("probe_id"), col("vec_id"), col("label"),
-              r6(cosineNative(col("embedding"), col("probe_emb"))).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-  }
-
   /** PORTABLE sign matrix for the oracle-gated embedding LSH: plane p's
     * ±1 component for dimension d is the first md5 hex nibble of "p:d"
     * (< 8 → +1) — the md5-component determinism pattern (q_dedup_minhash
@@ -344,44 +332,6 @@ object Similarity {
       when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
     }
     bits.reduce(_ + _)
-  }
-
-  /** Split a `planes`-bit signature into (band_idx, band_val) pairs of
-    * `bandBits` bits each — the classic banded-LSH OR-construction.
-    */
-  private def bandArray(sig: Column, planes: Int, bandBits: Int): Column = {
-    val nBands = planes / bandBits
-    array((0 until nBands).map { b =>
-      struct(lit(b).as("band_idx"),
-             pmod(shiftright(sig, b * bandBits), lit(1L << bandBits)).as("band_val"))
-    }: _*)
-  }
-
-  /** LSH-bucketed ANN: signatures are split into bands; a corpus vector is
-    * a candidate for a probe if ANY band matches (OR-construction — high
-    * recall), then exact cosine re-ranks the candidates. At 100 TB the
-    * cross join becomes a hash join on (band_idx, band_val) — the scale
-    * path: candidate count ≈ corpus/2^bandBits per band instead of the
-    * full corpus.
-    */
-  def lshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
-              planes: Int = 16, bandBits: Int = 8): DataFrame = {
-    val cs = corpus
-      .withColumn("b", explode(bandArray(lshSignature(col("embedding"), planes), planes, bandBits)))
-      .select(col("vec_id"), col("label"), col("embedding"),
-              col("b.band_idx").as("band_idx"), col("b.band_val").as("band_val"))
-    val ps = probes
-      .withColumn("b", explode(bandArray(lshSignature(col("probe_emb"), planes), planes, bandBits)))
-      .select(col("probe_id"), col("probe_emb"),
-              col("b.band_idx").as("band_idx"), col("b.band_val").as("band_val"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id"))
-    cs.join(broadcast(ps), Seq("band_idx", "band_val"))
-      .select(col("probe_id"), col("vec_id"), col("label"), col("embedding"), col("probe_emb"))
-      .dropDuplicates("probe_id", "vec_id")
-      .select(col("probe_id"), col("vec_id"), col("label"),
-              r6(cosineNative(col("embedding"), col("probe_emb"))).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
   }
 
   /** Embedding-cosine near-duplicate pairs (north-star dedup family):

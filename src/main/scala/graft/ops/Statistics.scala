@@ -1,13 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Table statistics collection — the ANALYZE / pg_stats reflection surface
   * (postpy admin.py reads server catalogs [unverified, SURVEY §0]; a Spark
-  * engine computes its own). One single-pass aggregate job produces
-  * per-column null counts, approximate NDV (HLL — constant memory per
-  * column, the only sane choice at 100 TB) and min/max rendered as strings.
+  * engine computes its own): per-column null counts and distinct counts
+  * in one distributed aggregate.
   *
   * These are exactly the inputs cost-based decisions need (broadcast-side
   * selection, bucketing keys, partition-count sizing) when file-level
@@ -18,11 +17,11 @@ object Statistics {
   /** EXACT per-column profile in ONE distributed plan (no collect, no
     * per-column jobs): null count + exact NDV per column, pivoted to long
     * format by a codegen'd stack(). Exact NDV over many columns costs an
-    * Expand (one shuffle leg per distinct) — that is ANALYZE's price; the
-    * HLL variant below is the constant-memory 100 TB default. This form is
-    * deterministic, so it is the one under the oracle gate
-    * (q_table_stats); min/max stay out of the declared output because
-    * engine string renderings of doubles/timestamps differ.
+    * Expand (one shuffle leg per distinct) — that is ANALYZE's price;
+    * approx_count_distinct would be the constant-memory alternative at
+    * 100 TB. This form is deterministic, so it is the one under the
+    * oracle gate (q_table_stats); min/max stay out of the declared output
+    * because engine string renderings of doubles/timestamps differ.
     */
   def tableStatsExact(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>
@@ -34,36 +33,5 @@ object Statistics {
     df.agg(aggs.head, aggs.tail: _*)
       .select(expr(s"stack(${cols.length}, $stackArgs) AS (col_name, n_nulls, n_distinct)"))
       .orderBy(col("col_name"))
-  }
-
-  /** One row per column: (column, n_nulls, approx_ndv, min, max).
-    * Single aggregation pass over the input — never one job per column.
-    */
-  def tableStats(df: DataFrame, rsd: Double = 0.05): DataFrame = {
-    val spark = df.sparkSession
-    val aggs = df.columns.flatMap { c =>
-      Seq(
-        // coalesce: an EMPTY input must yield 0, not a NULL that breaks getAs[Long]
-        coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nulls_$c"),
-        approx_count_distinct(col(c), rsd).as(s"__ndv_$c"),
-        min(col(c)).cast("string").as(s"__min_$c"),
-        max(col(c)).cast("string").as(s"__max_$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val out = df.columns.map { c =>
-      Row(c,
-        row.getAs[Long](s"__nulls_$c"),
-        row.getAs[Long](s"__ndv_$c"),
-        row.getAs[String](s"__min_$c"),
-        row.getAs[String](s"__max_$c"))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("column", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_nulls", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("approx_ndv", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("min", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("max", org.apache.spark.sql.types.StringType))))
   }
 }

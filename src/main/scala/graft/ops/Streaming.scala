@@ -577,15 +577,6 @@ object Streaming {
     }
   }
 
-  /** Streaming twin of `session` — native session_window (same gap
-    * semantics as the batch sessionization above).
-    */
-  def sessionOn(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), us(col("w.start")).as("sess_start_us"), col("n_events"))
-
   /** q_join_asof: each click paired with the latest signup of the same
     * user at-or-before it (DuckDB ASOF JOIN `>=` semantics, inner).
     *
@@ -769,28 +760,6 @@ object Streaming {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("user_id"))
-  }
-
-  /** Generic as-of join operator (the library API): for each left row,
-    * attach the greatest right `timeCol` ≤ left's, per key. Both inputs
-    * must share key + time column names.
-    */
-  def asofJoin(left: DataFrame, right: DataFrame, key: String, timeCol: String,
-               payload: Seq[String]): DataFrame = {
-    val l = left.withColumn("__kind", lit(1))
-    val r = right.select(
-      (col(key) +: col(timeCol) +: payload.map(col)): _*).withColumn("__kind", lit(0))
-    val all = r.unionByName(l, allowMissingColumns = true)
-    val w = Window.partitionBy(col(key)).orderBy(col(timeCol), col("__kind"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withAsof = payload.foldLeft(
-      all.withColumn("__rt", last(when(col("__kind") === 0, col(timeCol)), ignoreNulls = true).over(w))
-    ) { (df, p) =>
-      df.withColumn(s"asof_$p", last(when(col("__kind") === 0, col(p)), ignoreNulls = true).over(w))
-    }
-    withAsof.filter(col("__kind") === 1)
-      .drop("__kind" +: payload: _*)
-      .withColumnRenamed("__rt", s"asof_$timeCol")
   }
 
   /** Custom streaming state (§2 H API-only row): per-user running
@@ -987,27 +956,6 @@ object Streaming {
               unix_micros(col("v_ts")).as("view_us"))
   }
 
-  /** Batch twin of [[streamStreamClickView]] on identical inputs — the
-    * equality oracle for the StreamingSpec multi-batch run. Literally the
-    * same plan: withWatermark is a no-op on batch frames.
-    */
-  def clickViewBatch(views: DataFrame, clicks: DataFrame,
-                     windowMs: Long = 3600000L): DataFrame =
-    streamStreamClickView(views, clicks, windowMs = windowMs)
-
-  /** Streaming exact dedup (north-star: dedup a document STREAM): drop
-    * rows whose content hash was already seen, with the dedup state
-    * bounded by the watermark horizon — the streaming twin of
-    * Text.exactDedup. At 100 TB/day this is the ingest-side gate that
-    * keeps the batch dedup's input small.
-    */
-  def dedupStream(docs: DataFrame, tsCol: String, textCol: String,
-                  horizon: String = "1 hour"): DataFrame =
-    docs.withColumn("__h", md5(col(textCol)))
-      .withWatermark(tsCol, horizon)
-      .dropDuplicates("__h")
-      .drop("__h")
-
   /** File-source streaming reader for the events table (the readStream
     * twin of Sources.events — same nanos→micros normalization).
     */
@@ -1130,41 +1078,4 @@ object Streaming {
       col("ts_b") <= col("ts_a") + expr("INTERVAL 30 MINUTES"))
       .select(col("l_user").as("user_id"), col("id_a"), col("id_b"))
   }
-
-  /** Stream-stream LEFT OUTER interval join: like intervalJoinStream but
-    * unmatched left rows are EMITTED (null right side) once the watermark
-    * proves no match can still arrive. Both watermarks + the time-bound
-    * condition are mandatory — they are what lets Spark bound the state
-    * and declare a left row definitively unmatched; without them the
-    * planner rejects the outer join as unbounded.
-    */
-  def intervalJoinStreamLeftOuter(left: DataFrame, right: DataFrame): DataFrame = {
-    val l = left.select(col("user_id").as("l_user"), col("event_id").as("id_a"),
-                        col("ts").as("ts_a"))
-      .withWatermark("ts_a", "1 hour")
-    val r = right.select(col("user_id").as("r_user"), col("event_id").as("id_b"),
-                         col("ts").as("ts_b"))
-      .withWatermark("ts_b", "1 hour")
-    l.join(r,
-      col("l_user") === col("r_user") &&
-      col("ts_b") >= col("ts_a") &&
-      col("ts_b") <= col("ts_a") + expr("INTERVAL 30 MINUTES"),
-      "left_outer")
-      .select(col("l_user").as("user_id"), col("id_a"), col("id_b"))
-  }
-
-  /** Streaming dedup keyed on content hash with the WITHIN-WATERMARK
-    * guarantee (Spark 3.5+ dropDuplicatesWithinWatermark): duplicates
-    * whose event times land within the watermark delay of the first
-    * occurrence are dropped, and — unlike plain dropDuplicates — the state
-    * for a key is GUARANTEED evictable once the watermark passes it, so
-    * state stays O(in-horizon distinct content) even when the same content
-    * recurs forever. The right shape for endless crawl/ingest feeds.
-    */
-  def dedupStreamWithinWatermark(docs: DataFrame, tsCol: String, textCol: String,
-                                 horizon: String = "1 hour"): DataFrame =
-    docs.withColumn("__h", md5(col(textCol)))
-      .withWatermark(tsCol, horizon)
-      .dropDuplicatesWithinWatermark("__h")
-      .drop("__h")
 }

@@ -25,4 +25,11 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rel)
   }
+
+  /** Block until every event posted so far has reached every listener.
+    * The bus is private[spark]; counters read after this call are exact,
+    * with no polling.
+    */
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract drift guards: every declared query must have an oracle twin
@@ -13,13 +14,34 @@ class ContractSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("SPARK_GRAFT_CPUS parses to a positive core count or fails fast") {
-    assert(Bench.parseCpus(None) === 4)
-    assert(Bench.parseCpus(Some("8")) === 8)
-    assert(Bench.parseCpus(Some(" 32 ")) === 32)
+    assert(Session.parseCpus(None) === 4)
+    assert(Session.parseCpus(Some("8")) === 8)
+    assert(Session.parseCpus(Some(" 32 ")) === 32)
     Seq("", "0", "-2", "4.5", "eight", "local[4]").foreach { bad =>
-      val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+      val e = intercept[IllegalArgumentException](Session.parseCpus(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
     }
+  }
+
+  test("every run-once key is a declared key") {
+    val unknown = SparkEntry.runOnce.diff(SparkEntry.queries.keySet)
+    assert(unknown.isEmpty, s"runOnce names undeclared keys: $unknown")
+    assert(SparkEntry.runOnce("q_incremental_view"))
+  }
+
+  test("src/main builds its SparkSession in exactly one place") {
+    // copies of the builder drift apart (masters, shuffle width); the one
+    // factory, graft.Session, keeps Bench, Verify and Inspect alike
+    val call = java.util.regex.Pattern.quote("SparkSession.builder()").r
+    val sites = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      Seq.fill(call.findAllMatchIn(src).size)(f.getFileName.toString)
+    }
+    assert(sites === List("Session.scala"), s"SparkSession.builder() call sites: $sites")
   }
 
   test("every key follows the q_ naming convention") {

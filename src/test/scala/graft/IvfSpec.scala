@@ -25,7 +25,7 @@ class IvfSpec extends AnyFunSuite with SparkFixture {
     val corpus = emb.filter(col("vec_id") >= 15)
     val cents = Ivf.buildCentroids(corpus, k = 8, iters = 2)
     val idx = Ivf.index(corpus, cents)
-    val exact = Similarity.bruteForceTopK(corpus, probes, 1)
+    val exact = Reference.bruteForceTopK(corpus, probes, 1)
       .select("probe_id", "vec_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // nprobe = k ⇒ every cell searched ⇒ identical to brute force
     val full = Ivf.search(idx, probes, cents, k = 1, nprobe = 8)

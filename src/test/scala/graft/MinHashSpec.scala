@@ -78,6 +78,9 @@ class MinHashSpec extends AnyFunSuite with SparkFixture {
 
   test("native Md5MinHashSignature is bit-identical to the portable HOF chain") {
     import spark.implicits._
+    // the native expression is reached through its registered SQL name
+    graft.GraftExtensions.register(spark)
+    def native(ss: String, k: Int) = expr(s"minhash_md5($ss, $k)")
     // corpus shingle sets AND adversarial hand-built arrays: empty strings,
     // multi-space runs, unicode (incl. supplementary plane), null elements,
     // empty arrays, k not a multiple of 4
@@ -90,7 +93,7 @@ class MinHashSpec extends AnyFunSuite with SparkFixture {
     val weirdDf = weird.toDF("ss")
     for (df <- Seq(corpus, weirdDf); k <- Seq(1, 5, 8)) {
       val both = df.select(
-        MinHash.md5SignatureNative(col("ss"), k).as("nat"),
+        native("ss", k).as("nat"),
         MinHash.md5Signature(col("ss"), k).as("hof"))
       val rows = both.collect()
       rows.foreach { r =>
@@ -101,12 +104,12 @@ class MinHashSpec extends AnyFunSuite with SparkFixture {
     // null array element: HOF skips it (md5(null) → null, array_min skips)
     val withNullElem = spark.sql("SELECT array('a b c', CAST(NULL AS STRING), 'd e f') AS ss")
     val r = withNullElem.select(
-      MinHash.md5SignatureNative(col("ss"), 8).as("nat"),
+      native("ss", 8).as("nat"),
       MinHash.md5Signature(col("ss"), 8).as("hof")).head
     assert(r.getSeq[String](0) === r.getSeq[String](1))
     // null array → null out; empty array → k nulls
     val edge = spark.sql("SELECT CAST(NULL AS ARRAY<STRING>) AS ss")
-      .select(MinHash.md5SignatureNative(col("ss"), 4)).head
+      .select(native("ss", 4)).head
     assert(edge.isNullAt(0))
   }
 

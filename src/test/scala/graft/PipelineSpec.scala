@@ -3,18 +3,23 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Sources
-import graft.ops.Pipeline
+import graft.ops.{Pipeline, Text}
 
 class PipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("prepareCorpus: monotone shrinking stages, all annotations attached") {
-    val stats = Pipeline.corpusStats(Sources.documents(spark, sfDir))
-    assert(stats.input === 500)
-    assert(stats.afterQuality <= stats.input)
-    assert(stats.afterExactDedup <= stats.afterQuality)
-    assert(stats.afterNearDedup <= stats.afterExactDedup)
-    assert(stats.afterNearDedup > 0)
-    val cleaned = Pipeline.prepareDocuments(spark, sfDir)
+    // the stage counts prepareCorpus's plan passes through, one job each
+    val docs = Sources.documents(spark, sfDir)
+    val gated = Text.qualityScore(docs, "text").filter(col("quality") >= 0.3)
+    val exact = Text.exactDedup(gated, "text", "doc_id")
+    val cleaned = Pipeline.prepareCorpus(docs)
+    val Seq(input, afterQuality, afterExactDedup, afterNearDedup) =
+      Seq(docs, gated, exact, cleaned).map(_.count())
+    assert(input === 500)
+    assert(afterQuality <= input)
+    assert(afterExactDedup <= afterQuality)
+    assert(afterNearDedup <= afterExactDedup)
+    assert(afterNearDedup > 0)
     assert(Seq("quality", "lang_pred", "n_tokens_ws", "n_tokens_bpe")
       .forall(cleaned.columns.contains))
   }
@@ -30,8 +35,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("pipeline is deterministic across runs") {
-    val a = Pipeline.prepareDocuments(spark, sfDir).select("doc_id")
-    val b = Pipeline.prepareDocuments(spark, sfDir).select("doc_id")
+    val a = Pipeline.prepareCorpus(Sources.documents(spark, sfDir)).select("doc_id")
+    val b = Pipeline.prepareCorpus(Sources.documents(spark, sfDir)).select("doc_id")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

@@ -81,16 +81,6 @@ class RelationalSpec extends AnyFunSuite with SparkFixture {
     assert(lists.map(_.size).sum === 25)
   }
 
-  test("approx distinct within rsd tolerance of exact") {
-    val approx = Relational.approxDistinctSuppliers(spark, sfDir, 0.05)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = Relational.aggDistinct(spark, sfDir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    exact.foreach { case (k, e) =>
-      assert(math.abs(approx(k) - e).toDouble / e < 0.15, s"group $k: approx=${approx(k)} exact=$e")
-    }
-  }
-
   test("date spine: 84 complete months, zero-filled where no orders") {
     val rows = Relational.dateSpine(spark, sfDir).collect()
     assert(rows.length === 84)

@@ -117,16 +117,6 @@ class ScaleSpec extends AnyFunSuite with SparkFixture {
     } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("coPartition: downstream groupBy on the key reuses the partitioning") {
-    val co = Scale.coPartition(graft.io.Sources.orders(spark, sfDir), "o_custkey", 4)
-    val agg = co.groupBy("o_custkey").agg(count(lit(1)))
-    // exactly one exchange: the explicit repartition; the aggregate reuses it
-    val p = plan(agg)
-    val exchanges = p.sliding("Exchange hashpartitioning".length)
-      .count(_ == "Exchange hashpartitioning")
-    assert(exchanges === 1, s"aggregate should reuse the co-partitioning:\n$p")
-  }
-
   test("zorder2 matches a reference bit-interleave") {
     import spark.implicits._
     def ref(x: Long, y: Long, bits: Int): Long =

@@ -59,22 +59,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(rows.forall(r => r.getLong(2) >= 1 && r.getLong(2) <= 5))
   }
 
-  test("LSH recall: bucketed top-1 matches brute-force for most probes") {
-    val probes = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-    val corpus = emb.filter(col("vec_id") >= 20)
-    val exact = Similarity.bruteForceTopK(corpus, probes, 1)
-      .select(col("probe_id"), col("vec_id")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val approx = Similarity.lshTopK(corpus, probes, 1, planes = 16, bandBits = 4)
-      .select(col("probe_id"), col("vec_id")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // OR-construction over 4 bands of 4 bits — decent recall expected
-    val hits = exact.count { case (p, v) => approx.get(p).contains(v) }
-    assert(approx.nonEmpty)
-    assert(hits >= exact.size / 2, s"LSH top-1 recall too low: $hits/${exact.size}")
-  }
-
   test("LSH join prunes the candidate space vs full cross join") {
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))

@@ -30,13 +30,11 @@ object SparkFixture {
   def resolveSf(tag: String): String =
     sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/" + tag
 
+  /** The shared graft settings on four cores (`Session.configure`) plus a
+    * throwaway warehouse dir.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = Session.configure(4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .getOrCreate()

@@ -79,59 +79,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "window ending exactly at the watermark must be emitted (predicate is <=)")
   }
 
-  test("session: session_window stream equals batch sessionization") {
-    val events = MemoryStream[Ev]
-    val base = 1700000000000L
-    // user 1: two sessions (gap 45 min); user 2: one session
-    val rows = Seq(
-      Ev(1, new Timestamp(base), 1, "view", 1.0),
-      Ev(2, new Timestamp(base + 10 * 60000), 1, "view", 1.0),
-      Ev(3, new Timestamp(base + 55 * 60000), 1, "view", 1.0),
-      Ev(4, new Timestamp(base + 5 * 60000), 2, "view", 1.0),
-    )
-    // sentinel far in the future pushes the watermark past every session
-    val sentinel = Ev(99, new Timestamp(base + 100L * 3600000), 999, "view", 1.0)
-    val streamed = runBatches(events,
-      Streaming.sessionOn(events.toDF.withWatermark("ts", "10 minutes")),
-      Seq(rows, Seq(sentinel)))
-      .filter(col("user_id") =!= 999)
-    val batch = Streaming.sessionizeOn(rows.toDF())
-      .select(col("user_id"), col("sess_start_us"), col("n_events"))
-    assert(streamed.count() === 3)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("session under the RocksDB state store: stream equals batch sessionization") {
-    // same equivalence as above, but the session-window state lives in
-    // RocksDB — the provider a 1000-executor deployment would run (heap
-    // HDFSBackedStateStore caps state at executor memory; RocksDB spills)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = MemoryStream[Ev]
-      val base = 1700000000000L
-      val rows = Seq(
-        Ev(1, new Timestamp(base), 1, "view", 1.0),
-        Ev(2, new Timestamp(base + 10 * 60000), 1, "view", 1.0),
-        Ev(3, new Timestamp(base + 55 * 60000), 1, "view", 1.0),
-        Ev(4, new Timestamp(base + 5 * 60000), 2, "view", 1.0),
-      )
-      val sentinel = Ev(99, new Timestamp(base + 100L * 3600000), 999, "view", 1.0)
-      val streamed = runBatches(events,
-        Streaming.sessionOn(events.toDF.withWatermark("ts", "10 minutes")),
-        Seq(rows, Seq(sentinel)))
-        .filter(col("user_id") =!= 999)
-      val batch = Streaming.sessionizeOn(rows.toDF())
-        .select(col("user_id"), col("sess_start_us"), col("n_events"))
-      assert(streamed.count() === 3)
-      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("watermark: late event beyond the horizon is dropped") {
     val events = MemoryStream[Ev]
     val base = 1700000000000L
@@ -531,64 +478,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("streaming dedup drops repeated content within the horizon") {
-    val events = MemoryStream[Ev]
-    val base = 1700000000000L
-    // event_type doubles as "content"; two duplicates of A, one B
-    val res = runBatches(events,
-      graft.ops.Streaming.dedupStream(events.toDF, "ts", "event_type"),
-      Seq(
-        Seq(Ev(1, new Timestamp(base), 1, "contentA", 1.0),
-            Ev(2, new Timestamp(base + 1000), 2, "contentA", 1.0),
-            Ev(3, new Timestamp(base + 2000), 3, "contentB", 1.0)),
-        Seq(Ev(4, new Timestamp(base + 3000), 4, "contentA", 1.0)),
-      ))
-    assert(res.count() === 2, "only one contentA and one contentB survive")
-    assert(res.select("event_id").collect().map(_.getLong(0)).toSet === Set(1L, 3L))
-  }
-
-  test("stream-stream LEFT OUTER interval join emits the unmatched left row after watermark") {
-    val clicks = MemoryStream[Ev]
-    val views = MemoryStream[Ev]
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    qn += 1
-    val name = s"stream_result_$qn"
-    val q = Streaming.intervalJoinStreamLeftOuter(clicks.toDF(), views.toDF())
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    // user 1's click gets a view inside 30min; user 2's click never matches
-    clicks.addData(Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(0), 2, "click", 1.0))
-    views.addData(Ev(10, ts(10), 1, "view", 1.0))
-    q.processAllAvailable()
-    // push BOTH watermarks far past ts(0)+30min so user 2 is provably unmatched
-    clicks.addData(Ev(99, Timestamp.valueOf("2024-01-01 14:00:00"), 9, "click", 1.0))
-    views.addData(Ev(98, Timestamp.valueOf("2024-01-01 14:00:00"), 9, "view", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table(name).filter(col("user_id") < 9)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
-    assert(rows === Set((1L, 1L, 10L), (2L, 2L, -1L)),
-      "matched pair for user 1, null-padded row for user 2")
-  }
-
-  test("dropDuplicatesWithinWatermark: in-horizon repeat dropped, post-eviction repeat kept") {
-    val events = MemoryStream[Ev]
-    val base = 1700000000000L
-    val res = runBatches(events,
-      Streaming.dedupStreamWithinWatermark(events.toDF, "ts", "event_type"),
-      Seq(
-        Seq(Ev(1, new Timestamp(base), 1, "contentA", 1.0)),
-        // same content 1s later: within the 1h horizon → dropped
-        Seq(Ev(2, new Timestamp(base + 1000), 2, "contentA", 1.0)),
-        // advance the watermark far past base+1h → contentA state evicted
-        Seq(Ev(3, new Timestamp(base + 5L * 3600000), 3, "contentB", 1.0)),
-        // the SAME content recurring after eviction is a NEW occurrence
-        Seq(Ev(4, new Timestamp(base + 5L * 3600000 + 1000), 4, "contentA", 1.0)),
-      ))
-    assert(res.select("event_id").collect().map(_.getLong(0)).toSet === Set(1L, 3L, 4L),
-      "first A kept, in-horizon repeat dropped, post-eviction A re-emitted")
-  }
-
   test("stream-static join: streaming events enrich against a static dimension") {
     val events = MemoryStream[Ev]
     val base = 1700000000000L
@@ -612,22 +501,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getLong(0), r.getString(2))).toSet
     assert(rows === Set((1L, "alpha"), (2L, "beta"), (4L, "alpha")),
       "inner stream-static join must enrich matched users across batches and drop unmatched")
-  }
-
-  test("generic asofJoin agrees with the specialized click↔signup query") {
-    val e = graft.io.Sources.events(spark, sfDir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val signups = e.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts"), col("event_id").as("signup_event"))
-    val generic = Streaming.asofJoin(clicks, signups, "user_id", "ts", Seq("signup_event"))
-      .filter(col("asof_ts").isNotNull)
-    val specialized = Streaming.asofClickSignup(spark, sfDir)
-    assert(generic.count() === specialized.count())
-    val g = generic.select(col("event_id"),
-      unix_micros(col("asof_ts").cast("timestamp")).as("signup_us"))
-    val s = specialized.select(col("event_id"), col("signup_us"))
-    assert(g.exceptAll(s).isEmpty && s.exceptAll(g).isEmpty)
   }
 
   test("stream sliding exec: sink equals the batch sliding aggregate under the closure predicate") {
@@ -846,7 +719,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val vdf = Seq(ev(1, 0, 1, "view"), ev(2, 1000, 2, "view")).toDF()
     val cdf = Seq(ev(10, 30 * 60000, 1, "click"), ev(11, 500, 2, "click"),
                   ev(12, 1000, 3, "click"), ev(13, 2000, 2, "click")).toDF()
-    val batch = Streaming.clickViewBatch(vdf, cdf).collect()
+    val batch = Reference.clickViewBatch(vdf, cdf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(batch === got, "stream-stream result must equal the batch interval join")
   }
