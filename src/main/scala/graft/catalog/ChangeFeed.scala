@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.Materialize.snapshot
 
 /** CHANGE DATA FEED between two retained snapshots — the `table_changes
   * (t, v1, v2)` analogue Delta/Iceberg users expect on top of time travel:
@@ -65,15 +66,15 @@ object ChangeFeed {
              else keyed(toVersion)
 
     // each side feeds BOTH exceptAll branches — materialize once so the
-    // changed files are read once, not twice
-    def read(groups: Seq[Group]): DataFrame =
+    // changed files are read once, not twice; eagerly, because a later
+    // commit's retention sweep may delete the pinned files
+    def read(groups: Seq[Group]): DataFrame = snapshot(
       Bridge.v2Rows(spark, new GraftTable(base.name(), base.schema(), base.location,
                                           pinnedGroups = Some(groups),
                                           // props carry the FIELD IDS: without them the
                                           // pinned table would resolve columns positionally
                                           // and misbind after any DROP/RENAME COLUMN
-                                          props = base.props))
-        .localCheckpoint()
+                                          props = base.props)))
 
     val added = read((to -- from.keySet).values.toSeq.sortBy(_.file))
     val removed = read((from -- to.keySet).values.toSeq.sortBy(_.file))

@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.graftbridge.Materialize
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -299,11 +300,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
             ntile(256).over(w.orderBy(col(c2))).cast("long") - 1, 8)
           // materialize BEFORE the overwrite — the plan reads the table
           // it is about to replace
-          val sorted = df.withColumn("__z", z)
+          val sorted = Materialize.snapshot(df.withColumn("__z", z)
             .repartitionByRange(ng, col("__z"))
             .sortWithinPartitions(col("__z"))
-            .drop("__z")
-            .localCheckpoint()
+            .drop("__z"))
           val nRows = sorted.count()
           val tmp = s"__zorder_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
           sorted.createOrReplaceTempView(tmp)
@@ -1304,10 +1304,8 @@ object GroupFiles {
     * Schema is NOT rolled back: groups carry their field ids, so files
     * restored from before a later ADD/RENAME/DROP read under the current
     * schema exactly as live reads of old files do.
-    */
-  def rollbackTo(dir: Path, v: Long): Long = rollbackToVersions(dir, v)._2
-
-  /** Rollback returning (previous_version, current_version), BOTH read
+    *
+    * Returns (previous_version, current_version), BOTH read
     * inside the commit lock — reading `previous` outside would let a
     * concurrent commit land between the read and the publish, reporting
     * a stale previous_version that disagrees with current by more than 1.

@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Materialize.{reuse, snapshot}
 
 /** INCREMENTAL MATERIALIZED-VIEW maintenance over the catalog's change
   * feed — the missing piece between time travel (what changed) and the
@@ -193,7 +194,7 @@ object IncrementalView {
     // target snapshot. The flagged key set is summary-cardinality small —
     // broadcast it into a null-safe semi-join so the base scan stays one
     // pruned pass, never a full re-summarize.
-    val mergedCk = merged.localCheckpoint()
+    val mergedCk = reuse(merged)
     val flagged = mergedCk.filter(col("__rescan"))
       .select(dims.map(c => col(c).as(s"__r_$c")): _*)
     if (flagged.isEmpty) return mergedCk.drop("__rescan")
@@ -392,7 +393,7 @@ object IncrementalView {
       s"summary columns ${df.columns.mkString(",")}")
     // materialize BEFORE the overwrite: the new summary reads the view
     // table it is about to replace
-    val rows = df.select(target.map(col).toIndexedSeq: _*).localCheckpoint()
+    val rows = snapshot(df.select(target.map(col).toIndexedSeq: _*))
     val tmp = s"__ivm_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     rows.createOrReplaceTempView(tmp)
     try spark.sql(s"INSERT OVERWRITE $viewTable SELECT * FROM $tmp")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Event-analytics operators (north-star extension): cohort retention and
   * funnel conversion — the product-analytics verbs every event store gets
@@ -507,7 +508,8 @@ object Analytics {
     import graft.Det.cents
     val o = Sources.orders(spark, dir)
     val anchor = o.agg(max(col("o_orderdate").cast("date")).as("anchor"))
-    val perCust = o
+    // read by 3 grid probes, 3 censuses and 3 rank joins
+    val perCust = reuse(o
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate").cast("date")).as("last_d"),
            count(lit(1)).as("f"),
@@ -516,9 +518,8 @@ object Analytics {
       .withColumn("r_days", datediff(col("anchor"), col("last_d")))
       .join(Sources.customer(spark, dir)
               .select(col("c_custkey").as("o_custkey"), col("c_mktsegment").as("seg")),
-            Seq("o_custkey"))
-      .localCheckpoint(eager = false) // consumed by 3 censuses + 3 rank joins (lazy r12 — the grid probe materializes)
-    // equi-depth grids probed from the checkpointed frame — all three
+            Seq("o_custkey")))
+    // equi-depth grids probed from the materialized frame — all three
     // metrics in ONE 1-row aggregate job (Rank.gridsFor, r12 opt), not
     // hard-coded: a domain or mass-shape shift re-sizes the grid instead
     // of collapsing it (VERDICT r10 #3)
@@ -709,8 +710,9 @@ object Analytics {
       .join(tv, Seq("user_id"))
       .filter(col("us") >= col("tv"))
       .groupBy(col("user_id"), col("tv")).agg(min(col("us")).as("tp"))
-    val d = tp.select(col("user_id"), expr("(tp - tv) div 1000000").as("sec"))
-      .localCheckpoint(eager = false) // grid probe + rank + stats share the two joins' work (lazy r12)
+    // the grid probe (an action inside Rank), the rank and the stats
+    // share the two joins' work
+    val d = reuse(tp.select(col("user_id"), expr("(tp - tv) div 1000000").as("sec")))
     val rk = Rank.rankExact(d.withColumn("__all", lit(0)), "__all",
       col("sec"), col("user_id"), grid = Rank.gridFor(d, col("sec")),
       desc = false, out = "rk")

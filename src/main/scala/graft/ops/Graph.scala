@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 import graft.Det._
 import graft.io.Sources
 
@@ -18,11 +19,10 @@ import graft.io.Sources
   * itself and its neighbors; at fixpoint all nodes of a component carry
   * the component's minimum id. Each round is ONE hash-shuffle join on id
   * plus a groupBy — fully distributed, no driver-side row data (the only
-  * per-round action is a scalar changed-count). Lineage is truncated every
-  * round with localCheckpoint so the plan stays O(1) deep regardless of
-  * iteration count; on a real cluster with preemptible executors use
-  * reliable checkpoint() instead. Superseded per-round checkpoint blocks
-  * are dropped by reference: once a round's frame goes unreferenced,
+  * per-round action is a scalar changed-count). Each round's labels are
+  * materialized (`Materialize.reuse`), which truncates lineage so the plan
+  * stays O(1) deep regardless of iteration count. Superseded per-round
+  * blocks are dropped by reference: once a round's frame goes unreferenced,
   * Spark's ContextCleaner reclaims its blocks asynchronously (driver-GC
   * triggered), so storage stays bounded by the live frame, not the round
   * count.
@@ -46,16 +46,10 @@ object Graph {
     // A NULL endpoint is dropped (it denotes "no edge", not a node — and
     // the recursive-CTE oracle would never reach it through a NULL join
     // key).
-    // r12 opt: symmetrize with ONE explode per edge row (the old
-    // self-union evaluated the upstream plan twice and needed a separate
-    // e0 checkpoint to avoid that), then ONE exchange — hash by dst
-    // (dst-clustering satisfies the (src,dst) dedup), so the per-round
-    // `sym ⋈ labels` on dst never re-shuffles the adjacency; and the
-    // per-round `labels ⋈ nbrMin` on id reuses the id partitioning both
-    // sides inherit (labels from the previous round's checkpointed join
-    // output, nbrMin from its groupBy) — per round, only the nbr-min
-    // census exchange moves data.
-    val sym = edges
+    // Symmetrize with ONE explode per edge row (a self-union would
+    // evaluate the upstream plan twice), then ONE exchange: hash by dst,
+    // whose clustering satisfies the (src,dst) dedup.
+    val sym = reuse(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(explode(array(
@@ -63,11 +57,9 @@ object Graph {
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(eager = false) // lazy r12: round 1 materializes, later rounds reuse
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(eager = false)
+      .dropDuplicates("src", "dst"))
+    var labels = reuse(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -76,13 +68,10 @@ object Graph {
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("label")).as("nbr_min"))
-      val next = labels
+      val next = reuse(labels
         .join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("label").as("old_label"),
-                least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        // lazy (r12): the changed-count below is the materializing action,
-        // so the eager form paid a separate checkpoint job per round
-        .localCheckpoint(eager = false)
+                least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label")))
       changed = next.filter(col("label") =!= col("old_label")).count()
       labels = next.select(col("id"), col("label"))
       iter += 1
@@ -104,26 +93,21 @@ object Graph {
     * sit under the hash-match gate; production callers who want a
     * tolerance loop can wrap it (each extra round is one join + one agg).
     *
-    * Scale shape per round: edges ⋈ ranks on src (one hash shuffle on the
-    * SAME key every round — co-partitioning is reused), groupBy dst (one
+    * Scale shape per round: edges ⋈ ranks on src, groupBy dst (one
     * shuffle), left join back to the node set. Edges, degrees and nodes
-    * are materialized ONCE (localCheckpoint — each is referenced every
-    * round); the rounds themselves stay LAZY: each round references the
-    * previous ranks exactly once, so the composed plan is linear in
-    * `iterations` and the whole computation runs as one pipelined job —
-    * no per-round materialization barrier (connectedComponents needs one
-    * because its convergence count is a per-round ACTION; a fixed-round
-    * loop has none). For long loops on huge graphs set `checkpointEvery`
-    * to bound lineage/optimizer growth. Rank error vs the true
+    * are materialized once, since every round reads each of them; their
+    * shuffles run when they are built, before the rank query starts. The
+    * rounds are not materialized: each reads the previous ranks exactly
+    * once, so the composed plan is linear in `iterations` (under AQE it
+    * still runs as several jobs, one per stage). Rank error vs the true
     * eigenvector decays as d^t; 5 rounds is the planning-score regime,
     * not web-graph convergence.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int = 5, damping: Double = 0.85,
-               checkpointEvery: Int = 0): DataFrame = {
+               iterations: Int = 5, damping: Double = 0.85): DataFrame = {
     // Every loop-invariant frame is hash-partitioned on its per-round join
-    // key before it is checkpointed, but localCheckpoint does NOT carry
-    // that partitioning into the plan: a checkpointed frame plans as
+    // key before it is materialized, but the materialized frame does NOT
+    // carry that partitioning into the plan: it plans as
     // `Scan ExistingRDD`, so every round re-plans
     // `Scan ExistingRDD[src,dst]` -> `Exchange hashpartitioning(src, n)`,
     // and likewise for the node and degree frames (see the planned
@@ -131,21 +115,19 @@ object Graph {
     // exchanges are identical in every round, so AQE runs each once and
     // later rounds read it as a `ReusedExchange`. The one new shuffle per
     // round is the contribs groupBy on `dst`.
-    val e = edges
+    val e = reuse(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       // ONE exchange: hash by src, then dedup (src-clustering satisfies
       // the (src,dst) aggregate, so no second exchange); the plans that
-      // read the checkpoint still exchange by src (see above)
+      // read the materialized frame still exchange by src (see above)
       .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(eager = false) // lazy r12: the single pipelined rank job materializes all three
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")).localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct() // distinct ⇒ already hash-partitioned by id
-      .localCheckpoint(eager = false)
+      .dropDuplicates("src", "dst"))
+    val deg = reuse(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
+    val nodes = reuse(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     var ranks = nodes.withColumn("rank", lit(1.0))
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val contribs = e
         .join(ranks.select(col("id").as("src"), col("rank")), Seq("src"))
         .join(deg, Seq("src"))
@@ -155,8 +137,6 @@ object Graph {
         .join(contribs, Seq("id"), "left")
         .select(col("id"),
                 (lit(1.0 - damping) + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint()
     }
     ranks
   }
@@ -166,19 +146,17 @@ object Graph {
     * frontier-expansion dataflow (each level is a hash join on the node
     * key; the anti-join against the visited set is what keeps a dense
     * graph from re-expanding already-settled nodes). Levels are
-    * checkpointed so lineage stays O(1) per round, like
+    * materialized so lineage stays O(1) per round, like
     * connectedComponents. Rounds = the radius of interest, not data size.
     */
   def bfsHops(edges: DataFrame, src: Long, maxHops: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // r12 opt: symmetrize with ONE explode per input row instead of a
-    // self-union (the union evaluated the upstream edge plan twice and
-    // needed its own checkpoint to avoid that); then ONE exchange — hash
-    // by src (clustering by src satisfies the (src,dst) dedup, and every
-    // round's frontier join keys on src, so the adjacency never
-    // re-shuffles). The 1-row visited seed needs no materialization.
-    val sym = edges
+    // Symmetrize with ONE explode per input row (a self-union would
+    // evaluate the upstream edge plan twice), then ONE exchange: hash by
+    // src, whose clustering satisfies the (src,dst) dedup. The 1-row
+    // visited seed needs no materialization.
+    val sym = reuse(edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(explode(array(
@@ -186,17 +164,16 @@ object Graph {
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .localCheckpoint(eager = false) // lazy r12: the one 3-hop job materializes it
+      .dropDuplicates("src", "dst"))
     var visited = Seq((src, 0)).toDF("id", "hop")
     var frontier = visited.select(col("id"))
     var h = 0
     while (h < maxHops) {
       h += 1
       // only the new level materializes: `visited` is a union chain over
-      // already-checkpointed levels, so re-deriving it each round costs a
+      // already-materialized levels, so re-deriving it each round costs a
       // union of cached blocks, not a recomputation (3 rounds deep)
-      // r13 (guide §3.1/§3.2, VERDICT r12 #9): BROADCAST the frontier and
+      // BROADCAST the frontier and
       // the visited set — both are id-only frames bounded by the k-hop
       // neighborhood, orders of magnitude smaller than the adjacency. The
       // unhinted SMJ re-SORTED the src-partitioned adjacency every level
@@ -205,16 +182,10 @@ object Graph {
       // exchange too. (For frontiers beyond broadcast size — web-graph
       // BFS, not this bounded-radius query — drop the hints and the
       // partitioned SMJ form returns.)
-      val next = sym.join(broadcast(frontier.withColumnRenamed("id", "src")), Seq("src"))
+      val next = reuse(sym.join(broadcast(frontier.withColumnRenamed("id", "src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
         .join(broadcast(visited), Seq("id"), "left_anti")
-        .withColumn("hop", lit(h))
-        // LAZY checkpoint (r12): still truncates lineage and caches the
-        // level's blocks at first compute — `next` is referenced twice
-        // (visited union + next frontier) and materializes once — but
-        // without an eager per-level job barrier: the whole 3-hop
-        // expansion runs as one job at the final action.
-        .localCheckpoint(eager = false)
+        .withColumn("hop", lit(h)))
       visited = visited.union(next)
       frontier = next.select(col("id"))
     }
@@ -270,21 +241,17 @@ object Graph {
     * Returns one row: n_nodes, n_edges, n_triangles.
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-      .filter(col("u") < col("v"))
-      // lazy (r12): all references sit in ONE final job — blocks cache at
-      // first compute, no separate materialization job
-      .localCheckpoint(eager = false) // referenced by degrees, orientation, and the closing semi-join
+    val e = reuse(edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
+      .filter(col("u") < col("v")))
     val deg = e.select(col("u").as("n")).union(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
     val withDeg = e
       .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
     val lowerFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
+    val oriented = reuse(withDeg.select(
       when(lowerFirst, col("u")).otherwise(col("v")).as("src"),
-      when(lowerFirst, col("v")).otherwise(col("u")).as("dst"))
-      .localCheckpoint(eager = false) // joined with itself for wedges (lazy, r12)
+      when(lowerFirst, col("v")).otherwise(col("u")).as("dst")))
     val wedges = oriented.as("w1")
       .join(oriented.as("w2"), col("w1.src") === col("w2.src") && col("w1.dst") < col("w2.dst"))
       .select(least(col("w1.dst"), col("w2.dst")).as("u"),
@@ -393,8 +360,7 @@ object Graph {
     * guard moves to DECIMAL(38,0), r itself is unchanged.
     */
   def assortativityQuery(spark: SparkSession, dir: String): DataFrame = {
-    val e = coOrderEdges(spark, dir)
-      .localCheckpoint(eager = false) // consumed by the degree census + the edge join (lazy, r12)
+    val e = reuse(coOrderEdges(spark, dir))
     val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val j = e
@@ -432,18 +398,16 @@ object Graph {
     */
   def jaccardNeighborsQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.r6
-    val e = coOrderEdges(spark, dir)
-      .localCheckpoint(eager = false) // referenced by degrees, orientation, and the edge joins (lazy, r12)
+    val e = reuse(coOrderEdges(spark, dir))
     val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
     val withDeg = e
       .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
     val lowerFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
+    val oriented = reuse(withDeg.select(
       when(lowerFirst, col("u")).otherwise(col("v")).as("src"),
-      when(lowerFirst, col("v")).otherwise(col("u")).as("dst"))
-      .localCheckpoint(eager = false) // joined with itself for wedges (lazy, r12)
+      when(lowerFirst, col("v")).otherwise(col("u")).as("dst")))
     val wedges = oriented.as("w1")
       .join(oriented.as("w2"), col("w1.src") === col("w2.src") && col("w1.dst") < col("w2.dst"))
       .select(col("w1.src").as("w"),
@@ -483,25 +447,18 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = {
-    // r12 opt (guide §2.4): the adjacency is materialized ALREADY
-    // partitioned by the per-round join key, so none of the `rounds`
-    // joins re-shuffles the edge list — only the (src,label) census and
-    // the per-node argmax move data. The rounds themselves stay LAZY
-    // (fixed round count, no per-round action, and each round references
-    // the previous labels exactly ONCE, so the composed plan is linear in
-    // `rounds` — the q_pagerank argument; the old per-round eager
-    // localCheckpoint paid a materialization job every round for nothing).
-    // r13 (guide §2.4, the CC/BFS explode-symmetrize trick): ONE explode
-    // per edge row instead of unionAll of two projections — the upstream
-    // edge plan (for q_communities the full coOrderEdges pair-generation)
-    // is evaluated ONCE into the materialized adjacency, not twice.
+    // Nothing is materialized (the adjacency too measured no faster
+    // materialized, BASELINE.md): fixed round count, no per-round action,
+    // and each round reads the previous labels exactly once, so the
+    // composed plan is linear in `rounds`. ONE explode per edge row instead of unionAll
+    // of two projections: the upstream edge plan (for q_communities the
+    // full coOrderEdges pair-generation) is evaluated once, not twice.
     val und = edges
       .select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
-      .localCheckpoint(eager = false) // lazy r12: the one pipelined LPA job materializes it
     var labels = und.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     (1 to rounds).foreach { _ =>

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** End-to-end training-data corpus preparation (north-star composition):
   * the operators of Text/MinHash/Similarity chained the way a 100 TB
@@ -15,31 +16,12 @@ import graft.io.Sources
   */
 object Pipeline {
 
-  /** Quality gate → exact dedup → MinHash near-dup removal. Returns the
-    * cleaned corpus with quality/language/token annotations attached.
-    */
-  def prepareCorpus(docs: DataFrame, minQuality: Double = 0.3,
-                    nearDupEstimate: Double = 0.9): DataFrame = {
-    // 1. cheap per-row annotations + gate (no shuffle)
-    val annotated = Text.tokenCounts(
-      Text.languageId(Text.qualityScore(docs, "text"), "text"), "text")
-    val gated = annotated.filter(col("quality") >= minQuality)
-    // 2. exact dedup — one shuffle on the content hash
-    val exact = Text.exactDedup(gated, "text", "doc_id")
-    // 3. near-dup: banded MinHash candidates, drop the higher doc_id of
-    //    any pair whose estimated Jaccard clears the threshold
-    val dupIds = MinHash.candidatePairs(exact, "doc_id", "text")
-      .filter(col("est") >= nearDupEstimate)
-      .select(col("id_b").as("doc_id")).distinct()
-    exact.join(dupIds, Seq("doc_id"), "left_anti")
-  }
-
   /** q_pipeline_corpus: the oracle-exact pipeline twin — quality gate →
     * exact dedup (keep min doc_id per content hash) → EXACT n-gram-Jaccard
     * near-dup removal (drop the higher id of each pair ≥ 0.5, single
-    * pass) → per-language survivor stats. Same stage order as
-    * prepareCorpus; the approximate MinHash stage is swapped for the exact
-    * pair miner so every stage is DuckDB-checkable end-to-end.
+    * pass) → per-language survivor stats. The near-dup stage is an exact
+    * pair miner, not approximate MinHash, so every stage is
+    * DuckDB-checkable end-to-end.
     *
     * Miner choice (round 9, per judge): the near-dup stage is
     * Text.prefixJaccardPairs — the SUBQUADRATIC AllPairs/PPJoin form and
@@ -68,14 +50,13 @@ object Pipeline {
     // moves once, never through the decision shuffles), and the final
     // rollup never touches text at all.
     val docs = Sources.documents(spark, dir)
-    val dec = Text.qualityScore(docs, "text")
+    val dec = reuse(Text.qualityScore(docs, "text")
       .filter(col("quality") >= 0.3)
       .select(col("doc_id"), col("lang"), col("n_chars"), md5(col("text")).as("__h"))
       .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("__h")).orderBy(col("doc_id"))))
       .filter(col("__rn") === 1)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .localCheckpoint(eager = false) // lazy: the final job materializes it once
+      .select(col("doc_id"), col("lang"), col("n_chars")))
     // re-attach text to the survivors for the miner: ids-only semi-join —
     // the raw text column crosses exactly one join, into the shingler
     val dedText = docs.select(col("doc_id"), col("text"))
@@ -312,10 +293,10 @@ object Pipeline {
     */
   def scoreDecilesQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.r6
-    val q = Text.qualityScore(Sources.documents(spark, dir), "text")
+    // the regex-heavy score runs once, not 3x (grid probe, census, local rank)
+    val q = reuse(Text.qualityScore(Sources.documents(spark, dir), "text")
       .select(col("doc_id"), col("quality"))
-      .withColumn("__all", lit(0))
-      .localCheckpoint(eager = false) // the regex-heavy score runs ONCE, not 3x (probe + census + local; lazy r12 — the grid probe is the materializing action)
+      .withColumn("__all", lit(0)))
     val d = Rank.ntileExact(q, "__all", col("quality"), col("doc_id"),
       k = 10, grid = Rank.gridFor(q, col("quality")), desc = false, out = "decile")
     d.groupBy(col("decile").cast("long").as("decile"))

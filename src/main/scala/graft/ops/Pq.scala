@@ -60,12 +60,11 @@ object Pq {
     */
   def train(corpus: DataFrame, m: Int, ksub: Int, iters: Int = 3,
             idCol: String = "vec_id", embCol: String = "embedding"): Codebooks = {
-    // r12 opt (guide §5 — the driver should do almost no round trips):
     // dim comes from the init sample itself instead of a separate 1-row
     // probe job, and each Lloyd round runs as ONE distributed job — the
     // m per-subspace mean aggregates are a single (j, code)-grain
     // aggregate over a posexplode of the m code columns, collected once
-    // (≤ m·ksub rows), instead of an eager localCheckpoint job plus m
+    // (≤ m·ksub rows), instead of an eager materialization job plus m
     // separate groupBy+collect jobs per round (9 driver round trips → 1).
     // Per-centroid means are unchanged: the same rows contribute to the
     // same (j, code) group with the same float→double per-dimension avg.

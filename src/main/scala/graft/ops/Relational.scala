@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Det._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Relational query surface (SURVEY.md §2 B/D) — the capability a postpy
   * user gets by passing SQL through sql.select [unverified, SURVEY §0],
@@ -431,12 +432,8 @@ object Relational {
   def recursiveCte(spark: SparkSession, dir: String): DataFrame = {
     // materialize the projected join side ONCE: UnionLoop re-executes the
     // recursive step per level, and without this each of the ~log2(N)
-    // levels would re-scan the parquet file (lazy r12: level 1's job
-    // materializes the blocks, levels 2..log2(N) reuse them — same
-    // sharing, one fewer up-front job)
-    Sources.customer(spark, dir)
-      .select(col("c_custkey"), col("c_acctbal"))
-      .localCheckpoint(eager = false)
+    // levels would re-scan the parquet file
+    reuse(Sources.customer(spark, dir).select(col("c_custkey"), col("c_acctbal")))
       .createOrReplaceTempView("rc_customer")
     spark.sql(
       """WITH RECURSIVE h(ck, depth, bal) AS (

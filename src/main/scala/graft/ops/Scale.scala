@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Materialize.snapshot
 
 /** Cluster-scale join machinery (SURVEY §4 / the 100 TB mandate):
   * bucketing for shuffle-free co-located joins, and key salting for skew.
@@ -237,7 +238,7 @@ object Scale {
     * scale (application-side size threshold → 0; broadcast disabled so
     * the shuffle-join path — the one that matters at scale — is the one
     * exercised), materializes the result INSIDE the conf window
-    * (localCheckpoint is eager), then restores every conf — session
+    * (`Materialize.snapshot`), then restores every conf — session
     * plans for other keys never change. The oracle is the plain join:
     * bloom false-positives only ever pass rows through to the exact
     * join, so the hash gate proves the injected filter is
@@ -255,7 +256,7 @@ object Scale {
       spark.conf.set(keys(0), "true")
       spark.conf.set(keys(1), "0")
       spark.conf.set(keys(2), "-1")
-      runtimeFilterPlan(spark, dir).localCheckpoint() // eager: runs under the confs
+      snapshot(runtimeFilterPlan(spark, dir)) // planned and run before the confs are restored
     } finally saved.foreach { case (k, v) =>
       v match { case Some(s) => spark.conf.set(k, s); case None => spark.conf.unset(k) }
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Vector similarity operators (SURVEY.md §2 I): exact cosine top-k, kNN
   * classification, and the scale path — LSH-bucketed approximate nearest
@@ -88,10 +89,10 @@ object Similarity {
     * corpus (Scale.sampleByMd5 semantics, mirrored verbatim in the oracle
     * SQL) so the declared query's input — and therefore its pair count —
     * is deterministically bounded rather than all-pairs over the full
-    * corpus. The unbounded exact form (`simPairsExact`) stays API-only as
-    * the ground truth the LSH path (nearDupPairs) is tolerance-tested
-    * against; the production-scale path for the FULL corpus is always
-    * nearDupPairs (banded hash join), never this exact miner.
+    * corpus. The unbounded exact form (`simPairsExact`) is the ground
+    * truth the LSH path (`embedLshCandidates`) is recall-tested against
+    * (q_embed_lsh_recall); the production-scale path for the FULL corpus
+    * is always that banded hash join, never this exact miner.
     *
     * Round-6 BEFORE the threshold test so the boundary cannot flip
     * between engines.
@@ -103,7 +104,7 @@ object Similarity {
       // the declared gate's work must stay CONSTANT as the corpus grows
       // (at sf ≤ 0.1 the bound is a no-op; at 10× it caps the slice
       // instead of quadrupling the pair count 100×). The unbounded scale
-      // path is nearDupPairs (sign-LSH banding).
+      // path is embedLshCandidates (sign-LSH banding).
       Scale.sampleByMd5(
         Sources.embeddings(spark, dir).filter(col("vec_id") < 2000), "vec_id",
         (0 to 7).map(_.toHexString)),
@@ -114,7 +115,7 @@ object Similarity {
     * exploded to every block id, and the join runs on the block key — a
     * shuffled hash/sort-merge join, NOT a BroadcastNestedLoopJoin. Total
     * comparisons are still O(n²) (inherent to exact mining — bound n or
-    * use nearDupPairs), but the work is spread evenly over `blocks`
+    * use embedLshCandidates), but the work is spread evenly over `blocks`
     * reducers with ~n/blocks right rows each, instead of every pair
     * hitting one nested-loop task.
     */
@@ -181,10 +182,8 @@ object Similarity {
   }
 
   /** q_embed_lsh / q_embed_lsh_recall shared core: banded sign-projection
-    * candidate pairs over the FULL embedding corpus — the ORACLE-GATED
-    * twin of [[nearDupPairs]] (whose xxhash64 planes and double dot sums
-    * are engine-specific, hence API-only). Every step is cross-engine
-    * exact: embeddings quantize to round(x·1e6) BIGINTs (monotone, both
+    * candidate pairs over the FULL embedding corpus. Every step is
+    * cross-engine exact, so the result sits under the oracle gate: embeddings quantize to round(x·1e6) BIGINTs (monotone, both
     * engines round half away from zero, and the sign of a quantized dot
     * IS the declared hash — no IEEE summation order anywhere); plane
     * signs come from md5 nibbles; the 64-plane signature splits into
@@ -211,10 +210,10 @@ object Similarity {
       aggregate(zip_with(col("qe"), signs, (x, s) => x * s),
                 lit(0L), (acc, v) => acc + v).as(s"__dot$p")
     }
-    // no checkpoint here: the self-join's two sides are IDENTICAL
+    // not materialized: the self-join's two sides are IDENTICAL
     // subplans, so exchange reuse computes the signature shuffle once —
-    // measured 17.6 s WITH an eager localCheckpoint vs 15.0 s without at
-    // sf1, and re-measured in r12 (banded-frame checkpoint: q_embed_lsh
+    // measured 17.6 s WITH an eager materialization vs 15.0 s without at
+    // sf1, and re-measured lazily (banded frame: q_embed_lsh
     // 2.21→1.87 but q_embed_lsh_recall 1.56→2.13, net LOSS — the initial
     // explain shows two full signature subtrees, but AQE's runtime stage
     // reuse dedups them, so the checkpoint only adds a materialization
@@ -314,53 +313,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("sim"),
               coalesce(col("found"), lit(0L)).as("found"))
       .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Deterministic random-hyperplane sign bits: plane p's component for
-    * dimension i is derived from xxhash64(seed, p, i), mapped to ±1.
-    * sign(v) = bit vector of sign(v·plane_p) — classic SimHash/LSH for
-    * cosine similarity, built entirely from column expressions.
-    */
-  def lshSignature(emb: Column, planes: Int, seed: Int = 42): Column = {
-    val bits = (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(emb, sequence(lit(1), size(emb)),
-          (x, i) => x.cast("double") *
-            // hash(seed, plane, dim) → uniform ±1
-            when(pmod(xxhash64(lit(seed), lit(p), i), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Embedding-cosine near-duplicate pairs (north-star dedup family):
-    * LSH bands generate candidates (hash join, no quadratic blowup), exact
-    * cosine confirms against the threshold. Returns (id_a, id_b, sim)
-    * with id_a < id_b. Recall is governed by planes/bandBits (more, finer
-    * bands → higher recall, more candidates); exact duplicates always
-    * collide in every band, so recall@sim=1 is 1.0.
-    */
-  def nearDupPairs(df: DataFrame, idCol: String, embCol: String,
-                   threshold: Double, planes: Int = 16, bandBits: Int = 4): DataFrame = {
-    val nBands = planes / bandBits
-    val sig = df.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("sig", lshSignature(col("emb"), planes))
-      .withColumn("b", explode(array((0 until nBands).map { b =>
-        struct(lit(b).as("band_idx"),
-               pmod(shiftright(col("sig"), b * bandBits), lit(1L << bandBits)).as("band_val"))
-      }: _*)))
-      .select(col("id"), col("emb"), col("b.band_idx"), col("b.band_val"))
-    sig.as("x").join(sig.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-        col("x.band_val") === col("y.band_val") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-              col("x.emb").as("ea"), col("y.emb").as("eb"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("sim", r6(cosineNative(col("ea"), col("eb"))))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
   }
 
   /** SimHash of text tokens: 64-bit signature where bit b is the sign of
@@ -513,9 +465,7 @@ object Similarity {
     * bound, flat in corpus size). That IS distributed Lloyd at 100 TB.
     */
   def kmeansQuery(spark: SparkSession, dir: String): DataFrame = {
-    val e = Sources.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(eager = false) // consumed by init + both assignment rounds (lazy r12)
+    val e = reuse(Sources.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("centroid_id"))
     // round 0 IS the coarse assignment — one ranking rule for every
     // assignment in this file (a determinism fix there applies here too)
@@ -562,16 +512,14 @@ object Similarity {
     val cents = e0.crossJoin(broadcast(kDf))
       .filter(col("vec_id") < col("k"))
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cent_emb"))
-    val assign = clusterAssignWith(e0, cents)
-      .select(col("centroid_id").as("cl"), col("vec_id"), col("embedding"))
-      .localCheckpoint(eager = false) // both sides of the pair join + the member rollup (lazy r12)
-    val pairs = assign.select(col("cl"), col("vec_id").as("a"), col("embedding").as("ea"))
+    val assign = reuse(clusterAssignWith(e0, cents)
+      .select(col("centroid_id").as("cl"), col("vec_id"), col("embedding")))
+    val pairs = reuse(assign.select(col("cl"), col("vec_id").as("a"), col("embedding").as("ea"))
       .join(assign.select(col("cl"), col("vec_id").as("b"), col("embedding").as("eb")), Seq("cl"))
       .filter(col("a") < col("b"))
       .select(col("cl"), col("a"), col("b"),
               r6(cosineNative(col("ea"), col("eb"))).as("sim"))
-      .filter(col("sim") >= 0.3)
-      .localCheckpoint(eager = false) // pair rollup + distinct-member rollup (lazy r12)
+      .filter(col("sim") >= 0.3))
     val perCluster = pairs.groupBy(col("cl"))
       .agg(count(lit(1)).as("n_pairs"), max(col("sim")).as("max_sim"))
     val members = pairs.select(col("cl"), explode(array(col("a"), col("b"))).as("vec"))

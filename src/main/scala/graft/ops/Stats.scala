@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Statistical-testing and association-mining operators (north-star
   * extension): the two-sample tests a drift monitor or A/B harness runs,
@@ -147,11 +148,10 @@ object Stats {
     // in n_orders (the oracle's COUNT(DISTINCT l_orderkey)): the null part
     // keys are filtered inside the aggregate, not by a row filter that
     // would drop the order too. collect_set would skip them silently.
-    val perOrder = Sources.lineitem(spark, dir)
+    val perOrder = reuse(Sources.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
       .groupBy(col("l_orderkey"))
-      .agg(array_sort(expr("collect_set(l_partkey) FILTER (WHERE l_partkey IS NOT NULL)")).as("parts"))
-      .localCheckpoint(eager = false) // 3 consumers; the one final job materializes it
+      .agg(array_sort(expr("collect_set(l_partkey) FILTER (WHERE l_partkey IS NOT NULL)")).as("parts")))
     val nOrders = perOrder.agg(count(lit(1)).as("n_orders"))
     val itemCounts = perOrder.select(explode(col("parts")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
@@ -339,12 +339,12 @@ object Stats {
     */
   def gini(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.{money, r6}
-    val spend = Sources.orders(spark, dir)
+    // read by the grid probe, the census and the rank join
+    val spend = reuse(Sources.orders(spark, dir)
       .join(broadcast(Sources.customer(spark, dir)),
             col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("c_custkey"))
-      .agg((sum(money(col("o_totalprice"))) * 100).cast("long").as("cents"))
-      .localCheckpoint(eager = false) // consumed by census + rank join (lazy r12 — the grid probe materializes)
+      .agg((sum(money(col("o_totalprice"))) * 100).cast("long").as("cents")))
     Rank.rankExact(spend, "c_mktsegment", col("cents"), col("c_custkey"),
         Rank.gridFor(spend, col("cents")), desc = false, "i")
       .groupBy(col("c_mktsegment"))
@@ -371,12 +371,12 @@ object Stats {
     */
   def paretoTopN(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.r6
-    val spend = Sources.orders(spark, dir)
+    // read by the grid probe, the census and the rank join
+    val spend = reuse(Sources.orders(spark, dir)
       .join(broadcast(Sources.customer(spark, dir)),
             col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("c_custkey"))
-      .agg((sum(graft.Det.money(col("o_totalprice"))) * 100).cast("long").as("cents"))
-      .localCheckpoint(eager = false) // consumed by census + rank join (lazy r12 — the grid probe materializes)
+      .agg((sum(graft.Det.money(col("o_totalprice"))) * 100).cast("long").as("cents")))
     Rank.rankCumsum(spend, "c_mktsegment", col("cents"), col("c_custkey"),
         col("cents"), Rank.gridFor(spend, col("cents")), desc = true,
         "rk", "cum", "n_customers", "total")
@@ -486,13 +486,13 @@ object Stats {
     */
   def spearman(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.{cents, r6}
-    val per = Sources.orders(spark, dir)
+    // read by the grid probe, 2 censuses and 2 rank joins
+    val per = reuse(Sources.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("x"), sum(cents(col("o_totalprice"))).as("y"))
-      .withColumn("__all", lit(0))
-      .localCheckpoint(eager = false) // consumed by the grid probe + 2 censuses + 2 rank joins (lazy r12)
-    // equi-depth grids PROBED from the checkpointed frame — BOTH metrics
-    // in one 1-row aggregate job (Rank.gridsFor, r12 opt), not hard-coded
+      .withColumn("__all", lit(0)))
+    // equi-depth grids PROBED from the materialized frame — BOTH metrics
+    // in one 1-row aggregate job (Rank.gridsFor), not hard-coded
     // domain constants: the grid re-sizes itself under any
     // generator/domain shift (VERDICT r10 #3)
     val Seq(gx, gy) = Rank.gridsFor(per, Seq(col("x"), col("y")))
@@ -578,15 +578,12 @@ object Stats {
     */
   def mannWhitney(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.{cents, r6}
-    val two = Sources.customer(spark, dir)
+    // read by the grid probe, the rank census/join and the tie census
+    val two = reuse(Sources.customer(spark, dir)
       .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
       .select(col("c_custkey"), col("c_mktsegment").as("seg"),
               cents(col("c_acctbal")).as("v"))
-      .withColumn("__all", lit(0))
-      // consumed by the grid probe + rank census/join + tie census: without
-      // this the 1-row percentile probe re-runs the customer scan+filter
-      // on every execution (ADVICE r11 — the kruskalWallis pattern)
-      .localCheckpoint()
+      .withColumn("__all", lit(0)))
     val rk = Rank.rankExact(two, "__all", col("v"), col("c_custkey"),
       grid = Rank.gridFor(two, col("v")), desc = false, out = "rk")
     // tie census + shuffle join on v (cents nearly unique → ~n tiny
@@ -632,11 +629,11 @@ object Stats {
     */
   def kruskalWallis(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.{cents, r6}
-    val v = Sources.customer(spark, dir)
+    // the grid probe, the rank census/local and the tie census share one scan
+    val v = reuse(Sources.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment").as("seg"),
               cents(col("c_acctbal")).as("v"))
-      .withColumn("__all", lit(0))
-      .localCheckpoint(eager = false) // grid probe + rank census/local + tie census share ONE scan (lazy r12)
+      .withColumn("__all", lit(0)))
     val rk = Rank.rankExact(v, "__all", col("v"), col("c_custkey"),
       grid = Rank.gridFor(v, col("v")), desc = false, out = "rk")
     // doubled average rank per tie group: min+max of the run (exact, no

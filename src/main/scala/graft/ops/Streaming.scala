@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.Det._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Event-time processing (SURVEY.md §2 H + q_join_asof from §2 C).
   *
@@ -475,7 +476,7 @@ object Streaming {
   private def stageTimeOrderedTerciles(spark: SparkSession, ev: DataFrame,
                                        base: String,
                                        fs: org.apache.hadoop.fs.FileSystem): DataFrame = {
-    val evc = ev.localCheckpoint() // cut probe + three filtered writes share one scan
+    val evc = reuse(ev) // cut probe + three filtered writes share one scan
     val evUs = evc.withColumn("__us", unix_micros(col("ts")))
     // percentile_disc returns DOUBLE; the picked value is an actual
     // epoch-μs (< 2^53), so the round-trip cast is exact
@@ -922,40 +923,6 @@ object Streaming {
       .toDF("event_id", "user_id", "click_us", "signup_us")
   }
 
-  /** TRUE STREAM-STREAM inner interval join: attribute each click to the
-    * views the same user made in the preceding `windowMs` — two live
-    * streams, not stream-vs-static. Both sides carry watermarks and the
-    * join condition bounds event-time distance, which is exactly what
-    * lets Spark PURGE state: a buffered view older than
-    * (click watermark − window) can never match a future click, so state
-    * is O(in-horizon rows per side), not O(stream). This is the shape
-    * fact-to-fact streaming enrichment takes at 100 TB/day; without the
-    * interval bound the state grows without limit and the job dies at
-    * scale, so the bound is load-bearing, not decorative.
-    *
-    * Output: (user_id, click_id, view_id, click_us, view_us). Inner join
-    * ⇒ append mode; results finalize as the watermarks pass.
-    */
-  def streamStreamClickView(views: DataFrame, clicks: DataFrame,
-                            horizon: String = "10 minutes",
-                            windowMs: Long = 3600000L): DataFrame = {
-    val v = views
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-              col("ts").as("v_ts"))
-      .withWatermark("v_ts", horizon)
-    val c = clicks
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-              col("ts").as("c_ts"))
-      .withWatermark("c_ts", horizon)
-    v.join(c, expr(
-        s"""v_user = c_user AND
-           |c_ts >= v_ts AND
-           |c_ts <= v_ts + interval $windowMs milliseconds""".stripMargin))
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
-              unix_micros(col("c_ts")).as("click_us"),
-              unix_micros(col("v_ts")).as("view_us"))
-  }
-
   /** File-source streaming reader for the events table (the readStream
     * twin of Sources.events — same nanos→micros normalization).
     */
@@ -1057,25 +1024,5 @@ object Streaming {
                     |WHEN MATCHED THEN UPDATE SET *
                     |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     } finally spark0.catalog.dropTempView(view)
-  }
-
-  /** Stream-stream time-interval join (the streaming twin of
-    * intervalJoin): same-user event pairs within 30 minutes. BOTH sides
-    * carry watermarks and the join condition bounds event time in both
-    * directions, so Spark can expire join state — the required shape for
-    * an unbounded stream-stream join (state would otherwise grow forever).
-    */
-  def intervalJoinStream(left: DataFrame, right: DataFrame): DataFrame = {
-    val l = left.select(col("user_id").as("l_user"), col("event_id").as("id_a"),
-                        col("ts").as("ts_a"))
-      .withWatermark("ts_a", "1 hour")
-    val r = right.select(col("user_id").as("r_user"), col("event_id").as("id_b"),
-                         col("ts").as("ts_b"))
-      .withWatermark("ts_b", "1 hour")
-    l.join(r,
-      col("l_user") === col("r_user") && col("id_a") < col("id_b") &&
-      col("ts_b") >= col("ts_a") - expr("INTERVAL 30 MINUTES") &&
-      col("ts_b") <= col("ts_a") + expr("INTERVAL 30 MINUTES"))
-      .select(col("l_user").as("user_id"), col("id_a"), col("id_b"))
   }
 }

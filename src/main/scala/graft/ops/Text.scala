@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Text-pipeline operators (SURVEY.md §2 I + north-star text analysis):
   * exact dedup, corpus statistics, TF-IDF, language ID, quality scoring,
@@ -149,7 +150,6 @@ object Text {
       .select(filter(tokens(col("text")), t => t =!= "").as("t"))
     val uni = toks.select(explode(col("t")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // joined twice (a-side and b-side) + totalled (lazy r12)
     val bi = toks
       .select(explode(arrays_zip(
         slice(col("t"), lit(1), greatest(size(col("t")) - 1, lit(0))),
@@ -186,22 +186,15 @@ object Text {
     * q_entropy/tfidf ln-tolerance argument); rank ties break on doc_id.
     */
   def lmScoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    // r13 (guide §2.4 — two operations keyed the same way share one
-    // exchange; VERDICT r12 #6): the r12 plan shuffled the (lang, doc,
-    // tok) grain THREE times — the c_dt groupBy, the lm rollup's own
-    // exchange, and a re-exchange of tf to (lang, tok) for the join.
-    // Repartition tf ONCE by (lang, tok) and lazily checkpoint it: the lm
-    // rollup ((lang, tok) ⊂ clustering satisfied) and BOTH join sides
-    // then reuse that partitioning — zero further exchanges until the
-    // per-doc rollup — and the tf subtree materializes once instead of
-    // relying on AQE stage reuse across two branches.
-    val tf = Sources.documents(spark, dir)
+    // Repartition tf ONCE by (lang, tok) and materialize it: the tf
+    // subtree then runs once instead of relying on AQE stage reuse across
+    // the lm rollup and the join (1.16× slower without it at sf1).
+    val tf = reuse(Sources.documents(spark, dir)
       .select(col("lang"), col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("lang"), col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("c_dt"))
-      .repartition(col("lang"), col("tok"))
-      .localCheckpoint(eager = false) // lm + join consume it in the one final job
+      .repartition(col("lang"), col("tok")))
     val lm = tf.groupBy(col("lang"), col("tok")).agg(sum(col("c_dt")).as("c"))
     val tot = lm.groupBy(col("lang")).agg(sum(col("c")).as("n"))
     val perDoc = tf.join(lm, Seq("lang", "tok"))
@@ -394,7 +387,7 @@ object Text {
     */
   def lshScoredCandidates(spark: SparkSession, dir: String, rows: Int = 2): DataFrame = {
     val k = 8; val nBands = k / rows
-    val sigs = Sources.documents(spark, dir)
+    val sigs = reuse(Sources.documents(spark, dir)
       // fully fused native signature (graft.functions.Md5MinHashFromText —
       // text bytes → token-window digests, no shingle strings ever built);
       // null = fewer than 3 tokens, the old `size(ss) > 0` guard.
@@ -402,8 +395,7 @@ object Text {
       // and without this the signature build (the dominant per-row cost)
       // runs twice
       .select(col("doc_id"), MinHash.md5SignatureFromTextNative(col("text"), 3, k).as("sig"))
-      .filter(col("sig").isNotNull)
-      .localCheckpoint(eager = false) // lazy r12: both self-join sides sit in one job
+      .filter(col("sig").isNotNull))
     val banded = sigs.select(col("doc_id"), col("sig"),
         explode(transform(sequence(lit(0), lit(nBands - 1)), b =>
           struct(b.as("band_idx"),
@@ -947,14 +939,13 @@ object Text {
     // callers whose input is ALREADY exact-deduped — q_pipeline_corpus
     // runs this stage after its md5 dedup, where every shingle-set that
     // still collides is at most an md5-vs-shingle disagreement corner.
-    val tagged = df
+    val tagged = reuse(df
       .select(col(idCol).as("id"), xxShingleHashes(col(textCol), w).as("hs"))
       .filter(size(col("hs")) > 0)
       .withColumn("cid",
         if (collapse) min(col("id")).over(Window.partitionBy(xxhash64(col("hs"))))
         else col("id"))
-      .select(col("id"), col("cid"), col("hs"), size(col("hs")).as("sz"))
-      .localCheckpoint(eager = false) // lazy r12: every pair stage sits in the final job
+      .select(col("id"), col("cid"), col("hs"), size(col("hs")).as("sz")))
     val mem = tagged.select(col("cid"), col("id"))
     // distinct-content corpus: every pair stage below runs at this grain
     val docs = tagged.filter(col("id") === col("cid"))
@@ -1202,8 +1193,8 @@ object Text {
     * counts — Heaps-sublinear in corpus size); each round is one
     * pair-explode + one aggregate + one TakeOrdered(1) + one map-side
     * replace; the 5 collected merge rows are the OUTPUT itself (bounded
-    * driver artifacts, the IVF-centroid precedent). The per-round
-    * localCheckpoint keeps round r+1 from re-executing rounds 1..r
+    * driver artifacts, the IVF-centroid precedent). Materializing each
+    * round's vocabulary keeps round r+1 from re-executing rounds 1..r
     * twice (argmax + next census both consume the frame).
     */
   def bpeTrainQuery(spark: SparkSession, dir: String): DataFrame = {
@@ -1213,10 +1204,9 @@ object Text {
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    var vocab = words
+    var vocab = reuse(words
       .select(concat_ws(" ",
-        filter(split(col("w"), ""), x => length(x) > 0)).as("s"), col("cnt"))
-      .localCheckpoint(eager = false) // lazy r12: round 1's argmax head() materializes it
+        filter(split(col("w"), ""), x => length(x) > 0)).as("s"), col("cnt")))
     val merges = (1 to rounds).map { r =>
       val tk = split(col("s"), " ")
       // sequence(1, 0) DESCENDS in Spark (it never yields empty), so a
@@ -1231,12 +1221,11 @@ object Text {
       val top = pairs.orderBy(col("n").desc, col("pr")).limit(1).head()
       val Array(a, b) = top.getString(0).split(" ", 2)
       val n = top.getLong(1)
-      vocab = vocab.select(
+      vocab = reuse(vocab.select(
         trim(regexp_replace(
           replace(concat(lit(" "), replace(col("s"), lit(" "), lit("  ")), lit(" ")),
                   lit(s" $a  $b "), lit(s" $a$b ")),
-          " +", " ")).as("s"), col("cnt"))
-        .localCheckpoint(eager = false) // lazy r12: the next round's argmax materializes it
+          " +", " ")).as("s"), col("cnt")))
       Row(r, a, b, a + b, n)
     }
     spark.createDataFrame(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Sources
+import org.apache.spark.sql.graftbridge.Materialize.reuse
 
 /** Time-series operators (north-star extension): the resampling /
   * gap-filling / interval-algebra verbs a metrics or finance pipeline runs
@@ -371,12 +372,11 @@ object Timeseries {
     */
   def mannKendall(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.r6
-    val daily = Sources.events(spark, dir)
+    val daily = reuse(Sources.events(spark, dir)
       .select(col("event_type"),
               datediff(col("ts").cast("date"), lit("1970-01-01").cast("date")).as("epoch_day"))
       .groupBy(col("event_type"), col("epoch_day"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false) // pair sides + n + tie census share ONE scan (lazy r12)
+      .agg(count(lit(1)).as("cnt")))
     val a = daily.select(col("event_type"), col("epoch_day").as("da"), col("cnt").as("ca"))
     val b = daily.select(col("event_type"), col("epoch_day").as("db"), col("cnt").as("cb"))
     val s = a.join(b, Seq("event_type")).filter(col("da") < col("db"))
@@ -677,7 +677,6 @@ object Timeseries {
               datediff(col("ts").cast("date"), lit("1970-01-01").cast("date")).as("epoch_day"))
       .groupBy(col("event_type"), col("epoch_day"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false) // trend frame + seasonal rollup share ONE scan (lazy r12)
     val w7 = Window.partitionBy(col("event_type")).orderBy(col("epoch_day"))
       .rowsBetween(-3, 3)
     val t = daily
@@ -723,13 +722,11 @@ object Timeseries {
         struct((col("us") + 1800000000L).as("us"), lit(-1L).as("delta")))).as("x"))
       .select(col("event_type"), col("x.us").as("us"), col("x.delta").as("delta"))
     // starts carried through the census so n_events needs NO second
-    // events scan; localCheckpoint so the run and offset branches share
-    // ONE scan+aggregate (was 5 parquet scans as a plain tree)
+    // events scan
     val census = b.groupBy(col("event_type"), col("us"))
       .agg(sum(col("delta")).as("delta"),
            count(when(col("delta") === 1L, 1)).as("starts"))
       .withColumn("hr", expr("us div 3600000000"))
-      .localCheckpoint(eager = false) // lazy r12: run + hour-total branches share one job
     val wHr = Window.partitionBy(col("event_type"), col("hr")).orderBy(col("us"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val run = census.withColumn("run", sum(col("delta")).over(wHr))

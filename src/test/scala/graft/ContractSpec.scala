@@ -29,19 +29,28 @@ class ContractSpec extends AnyFunSuite with SparkFixture {
     assert(SparkEntry.runOnce("q_incremental_view"))
   }
 
+  /** The file name of every match of `call` in src/main/scala, once per match. */
+  private def mainSourceSites(call: scala.util.matching.Regex): List[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally files.close()
+  }.flatMap { f =>
+    val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    Seq.fill(call.findAllMatchIn(src).size)(f.getFileName.toString)
+  }
+
   test("src/main builds its SparkSession in exactly one place") {
     // copies of the builder drift apart (masters, shuffle width); the one
     // factory, graft.Session, keeps Bench, Verify and Inspect alike
-    val call = java.util.regex.Pattern.quote("SparkSession.builder()").r
-    val sites = {
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      Seq.fill(call.findAllMatchIn(src).size)(f.getFileName.toString)
-    }
+    val sites = mainSourceSites(java.util.regex.Pattern.quote("SparkSession.builder()").r)
     assert(sites === List("Session.scala"), s"SparkSession.builder() call sites: $sites")
+  }
+
+  test("src/main checkpoints a frame only inside the materialization seam") {
+    // each raw call carried its own eager/lazy lore; Materialize holds
+    // the one policy (reuse vs snapshot) and its one doc
+    val sites = mainSourceSites("""localCheckpoint\(|\.checkpoint\(""".r)
+    assert(sites.distinct === List("Materialize.scala"), s"checkpoint call sites: $sites")
   }
 
   test("every key follows the q_ naming convention") {

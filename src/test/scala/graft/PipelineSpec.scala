@@ -3,40 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Sources
-import graft.ops.{Pipeline, Text}
+import graft.ops.Pipeline
 
 class PipelineSpec extends AnyFunSuite with SparkFixture {
 
-  test("prepareCorpus: monotone shrinking stages, all annotations attached") {
-    // the stage counts prepareCorpus's plan passes through, one job each
-    val docs = Sources.documents(spark, sfDir)
-    val gated = Text.qualityScore(docs, "text").filter(col("quality") >= 0.3)
-    val exact = Text.exactDedup(gated, "text", "doc_id")
-    val cleaned = Pipeline.prepareCorpus(docs)
-    val Seq(input, afterQuality, afterExactDedup, afterNearDedup) =
-      Seq(docs, gated, exact, cleaned).map(_.count())
-    assert(input === 500)
-    assert(afterQuality <= input)
-    assert(afterExactDedup <= afterQuality)
-    assert(afterNearDedup <= afterExactDedup)
-    assert(afterNearDedup > 0)
-    assert(Seq("quality", "lang_pred", "n_tokens_ws", "n_tokens_bpe")
-      .forall(cleaned.columns.contains))
-  }
-
-  test("prepareCorpus removes planted exact and near duplicates") {
-    val base = Sources.documents(spark, sfDir)
-    val exactDupes = base.filter(col("doc_id") < 5)
-      .withColumn("doc_id", col("doc_id") + 10000)
-    val corpus = base.unionByName(exactDupes)
-    val cleaned = Pipeline.prepareCorpus(corpus)
-    // planted copies share text with a lower-id original → all removed
-    assert(cleaned.filter(col("doc_id") >= 10000).count() === 0)
-  }
-
   test("pipeline is deterministic across runs") {
-    val a = Pipeline.prepareCorpus(Sources.documents(spark, sfDir)).select("doc_id")
-    val b = Pipeline.prepareCorpus(Sources.documents(spark, sfDir)).select("doc_id")
+    val a = Pipeline.pipelineQuery(spark, sfDir)
+    val b = Pipeline.pipelineQuery(spark, sfDir)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

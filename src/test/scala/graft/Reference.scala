@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det.r6
-import graft.ops.{Similarity, Streaming}
+import graft.ops.Similarity
 
 /** Exact reference forms that suites compare graft's operators against.
   * They are test oracles, not engine API: no declared key calls them.
@@ -22,12 +22,4 @@ object Reference {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
   }
-
-  /** Batch twin of [[Streaming.streamStreamClickView]] on identical
-    * inputs: literally the same plan, since withWatermark is a no-op on
-    * batch frames.
-    */
-  def clickViewBatch(views: DataFrame, clicks: DataFrame,
-                     windowMs: Long = 3600000L): DataFrame =
-    Streaming.streamStreamClickView(views, clicks, windowMs = windowMs)
 }

@@ -60,24 +60,18 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("LSH join prunes the candidate space vs full cross join") {
-    val probes = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-    val corpus = emb.filter(col("vec_id") >= 20)
-    val full = corpus.count() * probes.count()
-    val cs = corpus.withColumn("band",
-      shiftright(Similarity.lshSignature(col("embedding"), 16), 12))
-    val ps = probes.withColumn("band",
-      shiftright(Similarity.lshSignature(col("probe_emb"), 16), 12))
-    val candidates = cs.join(ps, "band").count()
-    assert(candidates < full / 2, s"bucketing should prune: $candidates vs $full")
+    val n = emb.count()
+    val full = n * (n - 1) / 2
+    val candidates = Similarity.embedLshCandidates(emb).count()
+    assert(candidates < full / 2, s"banding should prune: $candidates vs $full")
   }
 
-  test("nearDupPairs finds planted duplicate embeddings at sim 1.0") {
+  test("embedLshCandidates finds planted duplicate embeddings at sim 1.0") {
     val base = emb.filter(col("vec_id") < 50)
     val planted = base.filter(col("vec_id") < 5)
       .withColumn("vec_id", col("vec_id") + 1000)
     val corpus = base.unionByName(planted)
-    val pairs = Similarity.nearDupPairs(corpus, "vec_id", "embedding", 0.999999)
+    val pairs = Similarity.embedLshCandidates(corpus)
       .filter(col("id_b") >= 1000 && col("id_a") === col("id_b") - 1000)
       .collect()
     assert(pairs.length === 5, s"expected 5 planted dup pairs, got ${pairs.length}")

@@ -632,32 +632,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(p.contains("bkt"), "composite (user_id, bkt) equi-key missing from plan:\n" + p)
   }
 
-  test("stream-stream interval join equals the batch pair join on the same rows") {
-    val events = MemoryStream[Ev]
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    val rows = Seq(
-      Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(10), 1, "view", 1.0),
-      Ev(3, ts(50), 1, "click", 1.0),                       // >30min from 1 and 2
-      Ev(4, ts(5), 2, "click", 1.0), Ev(5, ts(20), 2, "view", 1.0))
-    events.addData(rows: _*)
-    val streamed = runToTable(
-      Streaming.intervalJoinStream(events.toDF(), events.toDF()), "append")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // batch twin over the same rows
-    val batch = {
-      val df = rows.toDF()
-      val a = df.select(col("user_id"), col("event_id").as("id_a"), col("ts").as("ts_a"))
-      val b = df.select(col("user_id").as("u2"), col("event_id").as("id_b"), col("ts").as("ts_b"))
-      a.join(b, col("user_id") === col("u2") && col("id_a") < col("id_b") &&
-        abs(unix_micros(col("ts_a")) - unix_micros(col("ts_b"))) <= 30L*60*1000000)
-        .select(col("user_id"), col("id_a"), col("id_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    }
-    assert(streamed === batch)
-    assert(batch === Set((1L,1L,2L), (2L,4L,5L)))   // 3 pairs nothing (out of range)
-  }
-
-
   test("asofStream: incremental stateful as-of matches expected enrichment across batches") {
     val events = MemoryStream[Ev]
     def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
@@ -685,72 +659,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       (2L, 1L, us(5), us(0)),    // click after first signup
       (6L, 1L, us(15), us(10)),  // click matches the RE-signup, not the old one
       (7L, 2L, us(6), us(4))))   // u2's click after its signup; event 3 never matches
-  }
-
-  test("stream-stream interval join: two live streams equal the batch join; state purges late views") {
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val base = 1700000000000L
-    def ev(id: Long, offMs: Long, user: Long, kind: String) =
-      Ev(id, new Timestamp(base + offMs), user, kind, 1.0)
-    qn += 1
-    val name = s"stream_result_$qn"
-    // 1-minute horizon, 1-hour interval window
-    val q = Streaming.streamStreamClickView(views.toDF, clicks.toDF,
-        horizon = "1 minute", windowMs = 3600000L)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-
-    // b1: views for u1, u2
-    views.addData(ev(1, 0, 1, "view"), ev(2, 1000, 2, "view")); q.processAllAvailable()
-    // b2: clicks — u1 within the window (matches view 1), u2 click BEFORE
-    // its view (no match), u3 click with no view at all
-    clicks.addData(ev(10, 30 * 60000, 1, "click"), ev(11, 500, 2, "click"),
-                   ev(12, 1000, 3, "click")); q.processAllAvailable()
-    // b3: u2's second click within window of view 2
-    clicks.addData(ev(13, 2000, 2, "click")); q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table(name).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === Set((1L, 10L, 1L), (2L, 13L, 2L)),
-      s"unexpected stream-stream matches: $got")
-
-    // equality with the batch twin on the SAME rows
-    val vdf = Seq(ev(1, 0, 1, "view"), ev(2, 1000, 2, "view")).toDF()
-    val cdf = Seq(ev(10, 30 * 60000, 1, "click"), ev(11, 500, 2, "click"),
-                  ev(12, 1000, 3, "click"), ev(13, 2000, 2, "click")).toDF()
-    val batch = Reference.clickViewBatch(vdf, cdf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(batch === got, "stream-stream result must equal the batch interval join")
-  }
-
-  test("stream-stream interval join: view arriving past watermark+window never matches") {
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val base = 1700000000000L
-    def ev(id: Long, offMs: Long, user: Long, kind: String) =
-      Ev(id, new Timestamp(base + offMs), user, kind, 1.0)
-    qn += 1
-    val name = s"stream_result_$qn"
-    val q = Streaming.streamStreamClickView(views.toDF, clicks.toDF,
-        horizon = "1 minute", windowMs = 60000L)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-
-    // b1: far-future sentinel on BOTH sides pushes both watermarks way past base
-    views.addData(ev(1, 10 * 3600000L, 999, "view"))
-    clicks.addData(ev(2, 10 * 3600000L, 999, "click")); q.processAllAvailable()
-    q.processAllAvailable()
-    // b2: a view and a matching click both way behind the watermark —
-    // the join may not emit them once state for that region is purged
-    views.addData(ev(3, 0, 1, "view"))
-    clicks.addData(ev(4, 1000, 1, "click")); q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table(name).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // the only guaranteed-visible match is the sentinel pair
-    assert(got.forall(_._1 == 999L),
-      s"late-beyond-watermark rows must not produce matches: $got")
   }
 
   test("streamCdcExec: one micro-batch per change file; final state is the argmax-by-seq") {
