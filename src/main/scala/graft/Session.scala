@@ -29,6 +29,22 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
+  /** Run `body` with the session confs `confs` set, then restore each
+    * key's previous value (or unset it), also when `body` throws. Work
+    * that must see the confs — planning AND execution — has to finish
+    * inside `body`.
+    */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** A local session on `cpus` cores with WARN logging. */
   def local(cpus: Int): SparkSession = {
     val spark = configure(cpus).getOrCreate()

@@ -489,12 +489,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * (old files keep serving the column under its new name), a drop
     * retires the id (old files' bytes for it are skipped at read), an
     * add mints a fresh id (old files read NULL for it). Files record
-    * their id list in the manifest (`#f=`); files older than that token
-    * are add-only history whose columns are the schema's id prefix —
-    * the first DROP materializes their ids explicitly (one header read
-    * per file, one manifest commit) so position stays decodable forever.
-    * At 100 TB this is the only acceptable cost model for evolving a
-    * schema.
+    * their id list in the manifest (`#f=`), so position stays decodable
+    * forever. At 100 TB this is the only acceptable cost model for
+    * evolving a schema.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = tables.getOrElse(key(ident), throw new NoSuchTableException(ident))
@@ -587,21 +584,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           require(!props.get("partition_by").exists(_.equalsIgnoreCase(name)),
             s"cannot drop the partitioning column $name")
           val i = schema.fieldIndex(name)
-          val preIds = ids
-          // materialize ids on legacy (pre-token) groups — their columns
-          // are the PRE-drop schema's id prefix, read off each file's
-          // 4-byte width header — and strip the dropped column's stats so
-          // a future same-named column can never inherit them
-          manifestEdits += (_.map { g =>
-            val withIds = g.fieldIds match {
-              case Some(_) => g
-              case None =>
-                val in = new DataInputStream(Files.newInputStream(dir.resolve(g.file)))
-                val w = try in.readInt() finally in.close()
-                g.copy(fieldIds = Some(preIds.take(w)))
-            }
-            withIds.copy(stats = withIds.stats - name, nonNull = withIds.nonNull - name)
-          })
+          // strip the dropped column's stats so a future same-named
+          // column can never inherit them
+          manifestEdits += (_.map(g =>
+            g.copy(stats = g.stats - name, nonNull = g.nonNull - name)))
           schema = StructType(schema.fields.patch(i, Nil, 1))
           ids = ids.patch(i, Nil, 1)
           props += (GraftTable.DROPPED -> "true")
@@ -697,13 +683,6 @@ object GraftCatalog {
     registries.getOrElseUpdate(warehouse, new TrieMap[String, GraftTable]())
 }
 
-/** One live group file plus its pruning stats: per-column (min, max) for
-  * the long-typed columns, gathered by the writing task; `rows` = the
-  * file's row count; `nonNull` = per-column NON-NULL count (stats cover
-  * only non-null values, so proving a predicate matches ALL of a group's
-  * rows additionally requires nonNull(col) == rows — a NULL row never
-  * satisfies any comparison).
-  */
 /** The `bucket(numBuckets, col)` V2 function: pmod of the RAW long (nulls
   * to bucket 0). Deliberately transparent arithmetic, not a mixed hash —
   * the SAME rule is applied by the row-routing writer, by Spark when it
@@ -802,13 +781,34 @@ object GraftPartitionTransforms {
   val monthsFunction = new TimeUnbound("months")
 }
 
+/** One live group file plus its pruning stats: per-column (min, max) for
+  * the long-typed columns, gathered by the writing task; `rows` = the
+  * file's physical row count; `fieldIds` = the stable field ids of its
+  * columns in file position order; `bytes` = its size; `nonNull` =
+  * per-column NON-NULL count (stats cover only non-null values, so
+  * proving a predicate matches ALL of a group's rows additionally
+  * requires nonNull(col) == rows — a NULL row never satisfies any
+  * comparison).
+  *
+  * MANIFEST LINE GRAMMAR — one line per group, tab-separated, the file
+  * name first:
+  *
+  *   required  `#n=<rows>`  `#f=<id,id,…>` (empty for no columns)
+  *             `#z=<bytes>`
+  *   optional  `#b=<bucket>`  `#p=<partition>`  `#d=<dvfile>:<count>`
+  *             `#bm=1`
+  *   stats     `<col>=<lo>:<hi>[:<nonNull>]`, one per long column
+  *
+  * A missing or malformed required token fails the parse; a malformed
+  * stats token is dropped (stats only prune).
+  */
 case class Group(file: String, stats: Map[String, (Long, Long)],
-                 rows: Option[Long] = None,
+                 rows: Long,
+                 fieldIds: Seq[Int],
+                 bytes: Long,
                  nonNull: Map[String, Long] = Map.empty,
                  bucket: Option[Int] = None,
-                 fieldIds: Option[Seq[Int]] = None,
                  deletes: Option[(String, Long)] = None,
-                 bytes: Option[Long] = None,
                  bloom: Boolean = false,
                  part: Option[String] = None) {
   /** Conservative containment test: can this group hold `v` in `col`?
@@ -825,24 +825,12 @@ case class Group(file: String, stats: Map[String, (Long, Long)],
     * row is NULL") holds a fortiori for the live subset. Only EXACT
     * answers (COUNT/MIN/MAX pushdown) must account for [[deletes]].
     */
-  def noNulls(col: String): Boolean =
-    rows.exists(n => nonNull.get(col).contains(n))
+  def noNulls(col: String): Boolean = nonNull.get(col).contains(rows)
 
-  /** Rows visible after masking (None when the physical count is unknown). */
-  def liveRows: Option[Long] = rows.map(_ - deletes.map(_._2).getOrElse(0L))
+  /** Rows visible after masking. */
+  def liveRows: Long = rows - deletes.map(_._2).getOrElse(0L)
 }
 
-/** The on-disk layout: immutable `<uuid>.rows` group files (4-byte field
-  * count header, then length-prefixed UnsafeRow payloads) + a `manifest`
-  * text file naming the live groups (one per line:
-  * `file<TAB>col=min:max<TAB>…`). The manifest replace is the atomic
-  * commit point (same-filesystem ATOMIC_MOVE, like io.Sinks). Every commit
-  * also keeps a numbered snapshot `manifest.v<k>` (the last [[RETAIN]] of
-  * them) — the TIME-TRAVEL record: a group file stays on disk until no
-  * retained snapshot references it, so `VERSION AS OF` reads of recent
-  * commits are exact. The plain `manifest` is authoritative; snapshots are
-  * read-only views of past commits.
-  */
 /** Tri-state evaluation of a DSv2 predicate against a group's (min,max)
   * stats: does it match ALL of the group's rows, NONE, or unprovable
   * (SOME)? ALL/NONE power METADATA-ONLY DELETE (drop a fully-covered
@@ -954,6 +942,17 @@ private[catalog] object GroupPredicate {
     }
 }
 
+/** The on-disk layout: immutable `<uuid>.rows` group files (4-byte field
+  * count header, then length-prefixed UnsafeRow payloads) + a `manifest`
+  * text file naming the live groups, one [[Group]] line each. The
+  * manifest replace is the atomic commit point (same-filesystem
+  * ATOMIC_MOVE, like io.Sinks). Every commit also keeps a numbered
+  * snapshot `manifest.v<k>` (the last [[RETAIN]] of them) — the
+  * TIME-TRAVEL record: a group file stays on disk until no retained
+  * snapshot references it, so `VERSION AS OF` reads of recent commits
+  * are exact. The plain `manifest` is authoritative; snapshots are
+  * read-only views of past commits.
+  */
 object GroupFiles {
   private val MANIFEST = "manifest"
 
@@ -1108,20 +1107,43 @@ object GroupFiles {
     parseManifest(m)
   }
 
-  /** Defensive parse: a stats token that does not split cleanly into
-    * `col=lo:hi` with numeric bounds is DROPPED (no stats ⇒ no pruning —
-    * conservative, never wrong), not a crash at read time.
+  /** Parse a manifest (grammar on [[Group]]). A missing or malformed
+    * required token (`#n=`, `#f=`, `#z=`) fails loudly, naming the
+    * manifest, the group file and the token: serving file positions as
+    * field ids or guessing a size would read wrong data silently. A stats
+    * token that does not split cleanly into `col=lo:hi[:nonNull]` with
+    * numeric bounds is DROPPED (no stats ⇒ no pruning — conservative,
+    * never wrong).
     */
   private def parseManifest(m: Path): Seq[Group] = {
     if (!Files.exists(m)) return Seq.empty
     Files.readAllLines(m).asScala.toSeq.filter(_.nonEmpty).map { line =>
       val parts = line.split('\t')
-      // "#n=<count>" is the row-count token ('#'-prefixed names are
-      // excluded from stats by statsSafe, so it can never collide);
-      // manifests written before counts existed simply have none
-      val rows = parts.tail.collectFirst {
-        case s if s.startsWith("#n=") => s.stripPrefix("#n=").toLongOption
-      }.flatten
+      def required[T](tok: String)(parse: String => Option[T]): T = {
+        val raw = parts.tail.find(_.startsWith(tok)).getOrElse(
+          throw new IllegalStateException(
+            s"manifest $m: group ${parts.head} has no $tok token"))
+        parse(raw.stripPrefix(tok)).getOrElse(
+          throw new IllegalStateException(
+            s"manifest $m: group ${parts.head} has a malformed $tok token '$raw'"))
+      }
+      // '#'-prefixed names are excluded from stats by statsSafe, so a
+      // metadata token can never collide with a column's stats
+      val rows = required("#n=")(_.toLongOption)
+      // the STABLE FIELD IDS this file's columns were written with, in
+      // file position order — the Iceberg-style identity that makes
+      // RENAME/DROP COLUMN metadata-only (the reader maps schema ids to
+      // file positions; a missing id reads NULL, an extra id is skipped)
+      val fids = required("#f=") { raw =>
+        if (raw.isEmpty) Some(Seq.empty[Int])
+        else {
+          val ids = raw.split(',').map(_.toIntOption)
+          if (ids.forall(_.isDefined)) Some(ids.flatten.toSeq) else None
+        }
+      }
+      // the file's size, recorded at write time so query-planning
+      // statistics never stat() data files
+      val size = required("#z=")(_.toLongOption)
       // "#b=<id>" tags the group with its hash bucket (bucketed tables
       // route every row at write time; the scan groups files by this tag
       // to report KeyGroupedPartitioning)
@@ -1134,21 +1156,6 @@ object GroupFiles {
       val part = parts.tail.collectFirst {
         case s if s.startsWith("#p=") => s.stripPrefix("#p=")
       }
-      // "#f=<id,id,…>" records the STABLE FIELD IDS this file's columns
-      // were written with, in file position order — the Iceberg-style
-      // identity that makes RENAME/DROP COLUMN metadata-only (the reader
-      // maps schema ids to file positions; a missing id reads NULL, an
-      // extra id is skipped). Files written before this token exists are
-      // add-only history: their columns are the schema's id prefix.
-      val fids = parts.tail.collectFirst {
-        case s if s.startsWith("#f=") =>
-          val raw = s.stripPrefix("#f=")
-          if (raw.isEmpty) Some(Seq.empty[Int])
-          else {
-            val ids = raw.split(',').map(_.toIntOption)
-            if (ids.forall(_.isDefined)) Some(ids.flatten.toSeq) else None
-          }
-      }.flatten
       // "#d=<dvfile>:<count>" — MERGE-ON-READ positional delete vector:
       // <dvfile> holds the sorted physical row positions masked out of
       // this group, <count> is their number (so COUNT(*) pushdown can
@@ -1162,17 +1169,13 @@ object GroupFiles {
           if (cut <= 0) None
           else raw.drop(cut + 1).toLongOption.map(n => (raw.take(cut), n))
       }.flatten
-      // "#z=<bytes>" — the file's size, recorded at write time so
-      // query-planning statistics never stat() data files
-      val size = parts.tail.collectFirst {
-        case s if s.startsWith("#z=") => s.stripPrefix("#z=").toLongOption
-      }.flatten
       // "#bm=1" — a bloom-filter sidecar (<file>.bloom) exists for this
       // group's long columns (equality pruning; see GroupBloom)
       val bloom = parts.tail.contains("#bm=1")
       // stats token: col=lo:hi[:nonNullCount] — the third part is the
-      // non-null count that lets MatchesAll prove NULL absence; legacy
-      // two-part tokens parse with no such proof
+      // non-null count that lets MatchesAll prove NULL absence;
+      // materializeDeletes writes two-part tokens (it cannot know the
+      // masked rows' nulls)
       val parsed = parts.tail.filterNot(_.startsWith("#")).flatMap { s =>
         s.split("=", 2) match {
           case Array(col, range) => range.split(":", 3) match {
@@ -1187,9 +1190,8 @@ object GroupFiles {
           case _ => None
         }
       }
-      Group(parts.head, parsed.map(t => t._1 -> t._2).toMap, rows,
-            parsed.flatMap(t => t._3.map(t._1 -> _)).toMap, bucket, fids, dv, size,
-            bloom, part)
+      Group(parts.head, parsed.map(t => t._1 -> t._2).toMap, rows, fids, size,
+            parsed.flatMap(t => t._3.map(t._1 -> _)).toMap, bucket, dv, bloom, part)
     }
   }
 
@@ -1240,12 +1242,12 @@ object GroupFiles {
     }
     val lines = groups.map { g =>
       (g.file +:
-        (g.rows.map(n => s"#n=$n").toSeq ++
+        (Seq(s"#n=${g.rows}") ++
          g.bucket.map(b => s"#b=$b").toSeq ++
          g.part.map(p => s"#p=$p").toSeq ++
-         g.fieldIds.map(ids => s"#f=${ids.mkString(",")}").toSeq ++
+         Seq(s"#f=${g.fieldIds.mkString(",")}") ++
          g.deletes.map { case (f, n) => s"#d=$f:$n" }.toSeq ++
-         g.bytes.map(z => s"#z=$z").toSeq ++
+         Seq(s"#z=${g.bytes}") ++
          (if (g.bloom) Seq("#bm=1") else Seq.empty) ++
          g.stats.toSeq.filter(kv => statsSafe(kv._1)).sortBy(_._1)
            .map { case (c, (lo, hi)) =>
@@ -1412,8 +1414,8 @@ object GroupFiles {
         newDeletes.get(g.file).filter(_.nonEmpty).map { ps =>
           val merged = (g.deletes.map(d => readDeleteVector(dir, d._1))
             .getOrElse(Array.empty[Long]).toSet ++ ps).toArray.sorted
-          g.rows.foreach(n => require(merged.forall(p => p >= 0 && p < n),
-            s"delete position out of range for ${g.file} ($n rows)"))
+          require(merged.forall(p => p >= 0 && p < g.rows),
+            s"delete position out of range for ${g.file} (${g.rows} rows)")
           g.file -> merged
         }
       }.toMap
@@ -1421,7 +1423,7 @@ object GroupFiles {
         mergedByFile.get(g.file) match {
           case None => Some(g)
           case Some(merged) =>
-            if (g.rows.contains(merged.length.toLong)) None // fully deleted
+            if (merged.length == g.rows) None // fully deleted
             else Some(g.copy(deletes =
               Some((writeDeleteVector(dir, merged), merged.length.toLong))))
         }
@@ -1451,37 +1453,21 @@ object GroupFiles {
           var kept = 0L; var pos = 0L; var di = 0
           try {
             out.writeInt(in.readInt())
-            var eof = false
-            while (!eof) {
-              // same byte-wise EOF discipline as the scan reader: a clean
-              // end is ONLY zero bytes before a length prefix — rewriting
-              // a torn file as "clean" would launder the corruption
-              val b0 = in.read()
-              if (b0 < 0) eof = true
-              else {
-                val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-                if (b1 < 0 || b2 < 0 || b3 < 0) throw new java.io.IOException(
-                  s"torn group file ${g.file}: truncated inside a row length prefix")
-                val len = (b0 << 24) | (b1 << 16) | (b2 << 8) | b3
-                require(len >= 0 && len <= (1 << 30),
-                  s"group file ${g.file}: corrupt row length $len")
-                val bytes = new Array[Byte](len)
-                try in.readFully(bytes)
-                catch {
-                  case e: EOFException => throw new java.io.IOException(
-                    s"torn group file ${g.file}: row of $len bytes truncated mid-read", e)
-                }
-                if (di < dv.length && dv(di) == pos) di += 1
-                else { out.writeInt(len); out.write(bytes); kept += 1 }
-                pos += 1
-              }
+            // the scan reader's torn-file discipline: rewriting a torn
+            // file as "clean" would launder the corruption
+            var bytes = GroupRowsReader.readRow(in, g.file)
+            while (bytes != null) {
+              if (di < dv.length && dv(di) == pos) di += 1
+              else { out.writeInt(bytes.length); out.write(bytes); kept += 1 }
+              pos += 1
+              bytes = GroupRowsReader.readRow(in, g.file)
             }
           } finally { in.close(); out.close() }
-          g.rows.foreach(n => require(pos == n,
-            s"group ${g.file} holds $pos rows but the manifest records $n — torn file"))
+          require(pos == g.rows,
+            s"group ${g.file} holds $pos rows but the manifest records ${g.rows} — torn file")
           Files.move(tmp, dir.resolve(newName), StandardCopyOption.ATOMIC_MOVE)
-          g.copy(file = newName, rows = Some(kept), nonNull = Map.empty, deletes = None,
-                 bytes = Some(Files.size(dir.resolve(newName))), bloom = false)
+          g.copy(file = newName, rows = kept, nonNull = Map.empty, deletes = None,
+                 bytes = Files.size(dir.resolve(newName)), bloom = false)
       }
     }
   }
@@ -1503,40 +1489,33 @@ object GroupFiles {
     // materializeDeletes first to fold vectors in and make them packable.
     val (masked, groups) = allGroups.partition(_.deletes.isDefined)
     masked ++ (if (groups.size <= 1) groups else {
-    // bin only groups of the SAME schema identity together: files with
-    // field-id tags merge iff their id lists are identical byte layouts;
-    // legacy untagged files (add-only history) merge by row width. Mixed
-    // generations null-pad/project at read and can only merge with their
-    // own kind — byte concatenation must never change column meaning.
-    def fieldsOf(g: Group): Int = {
-      val in = new DataInputStream(Files.newInputStream(dir.resolve(g.file)))
-      try in.readInt() finally in.close()
-    }
-    def schemaKey(g: Group): String =
-      g.fieldIds.map(ids => s"f:${ids.mkString(",")}").getOrElse(s"w:${fieldsOf(g)}")
+    // bin only groups of the SAME schema identity together: files merge
+    // iff their field-id lists are identical byte layouts. Groups written
+    // under different schemas null-pad/project at read and can only merge
+    // with their own kind — byte concatenation must never change column
+    // meaning.
     val bins = scala.collection.mutable.ArrayBuffer
-      .empty[scala.collection.mutable.ArrayBuffer[(Group, Long)]]
+      .empty[scala.collection.mutable.ArrayBuffer[Group]]
     // bucketed tables additionally bin WITHIN a bucket only (a merged
     // group keeps one unambiguous #b tag, preserving the reported
     // KeyGroupedPartitioning across compactions); value-partitioned
     // tables bin WITHIN a partition only for the same reason (#p)
-    groups.groupBy(g => (schemaKey(g), g.bucket, g.part)).toSeq
+    groups.groupBy(g => (g.fieldIds.mkString(","), g.bucket, g.part)).toSeq
       // sort the FULL key: hash-map order on bucket/partition ties would
       // make the compacted manifest nondeterministic run to run
       .sortBy { case ((f, b, p), _) => (f, b.getOrElse(-1), p.getOrElse("")) }
       .foreach { case (_, gen) =>
-      bins += scala.collection.mutable.ArrayBuffer.empty[(Group, Long)]
+      bins += scala.collection.mutable.ArrayBuffer.empty[Group]
       gen.foreach { g =>
-        val sz = Files.size(dir.resolve(g.file))
-        if (bins.last.nonEmpty && bins.last.map(_._2).sum + sz > targetBytes)
-          bins += scala.collection.mutable.ArrayBuffer.empty[(Group, Long)]
-        bins.last += ((g, sz))
+        if (bins.last.nonEmpty && bins.last.map(_.bytes).sum + g.bytes > targetBytes)
+          bins += scala.collection.mutable.ArrayBuffer.empty[Group]
+        bins.last += g
       }
     }
     bins.filter(_.nonEmpty).map { bin =>
-      if (bin.size == 1) bin.head._1
+      if (bin.size == 1) bin.head
       else {
-        val members = bin.map(_._1).toSeq
+        val members = bin.toSeq
         val merged = s"compact-${java.util.UUID.randomUUID()}.rows"
         val outStream = new DataOutputStream(new BufferedOutputStream(
           Files.newOutputStream(dir.resolve(merged + ".tmp"))))
@@ -1561,10 +1540,6 @@ object GroupFiles {
         val stats = cols.map { c =>
           c -> ((members.map(_.stats(c)._1).min, members.map(_.stats(c)._2).max))
         }.toMap
-        // merged counts = sums, known only if every member's count is
-        val rows =
-          if (members.forall(_.rows.isDefined)) Some(members.flatMap(_.rows).sum)
-          else None
         val nn = cols.flatMap { c =>
           if (members.forall(_.nonNull.contains(c)))
             Some(c -> members.map(_.nonNull(c)).sum)
@@ -1572,9 +1547,9 @@ object GroupFiles {
         }.toMap
         // merged groups drop their members' blooms (different sizes do
         // not OR); the next rewrite of the data rebuilds one
-        Group(merged, stats, rows, nn, bin.head._1.bucket, bin.head._1.fieldIds,
-              bytes = Some(Files.size(dir.resolve(merged))),
-              part = bin.head._1.part)
+        Group(merged, stats, members.map(_.rows).sum, bin.head.fieldIds,
+              Files.size(dir.resolve(merged)), nn, bin.head.bucket,
+              part = bin.head.part)
       }
     }.toSeq
     })
@@ -1644,10 +1619,10 @@ class GraftTable(tableName: String, tableSchema: StructType, val location: Strin
   /** The field id of a CURRENT schema column (exact-name lookup). */
   def fieldIdOf(col: String): Int = fieldIds(tableSchema.fieldIndex(col))
 
-  /** True once any column has ever been DROPPED: legacy (pre-field-id)
-    * groups' name-keyed stats can then no longer be trusted for a
-    * re-added same-named column in retained old snapshots — readers of
-    * such groups must skip stats-only answers (see translate()).
+  /** True once any column has ever been DROPPED: a retained snapshot's
+    * name-keyed stats may then describe a dead field whose name a later
+    * ADD reused, so pinned-version reads must skip stats-only answers
+    * (see translate() and statsReliable).
     */
   val everDropped: Boolean = props.get(GraftTable.DROPPED).contains("true")
 
@@ -1961,13 +1936,10 @@ class GraftScanBuilder(table: GraftTable, holder: Option[ScanHolder])
     * the file actually wrote that field ID. Matters for time travel
     * across a DROP + re-ADD of the same name: a pre-drop snapshot's
     * stats for the dead field must not answer MIN/MAX for its reborn
-    * namesake. Groups without recorded ids are trustworthy exactly when
-    * the table has never dropped a column (pure add-only history).
+    * namesake.
     */
-  private def statsTrusted(g: Group, c: String): Boolean = g.fieldIds match {
-    case Some(ids) => ids.contains(table.fieldIdOf(c))
-    case None => !table.everDropped
-  }
+  private def statsTrusted(g: Group, c: String): Boolean =
+    g.fieldIds.contains(table.fieldIdOf(c))
 
   private def translate(agg: Aggregation): Option[(StructType, Seq[Option[Long]])] = {
     if (holder.nonEmpty || agg.groupByExpressions().nonEmpty) return None
@@ -1983,11 +1955,10 @@ class GraftScanBuilder(table: GraftTable, holder: Option[ScanHolder])
     val values = Seq.newBuilder[Option[Long]]
     agg.aggregateExpressions().zipWithIndex.foreach {
       case (_: CountStar, i) =>
-        if (!groups.forall(_.rows.isDefined)) return None
         fields += StructField(s"agg$i", LongType, nullable = false)
         // liveRows: a merge-on-read delete vector masks #d rows of the
         // physical count — COUNT(*) stays an exact metadata answer
-        values += Some(groups.flatMap(_.liveRows).sum)
+        values += Some(groups.map(_.liveRows).sum)
       case (m: Min, i) =>
         // a group with a delete vector may have lost exactly the row
         // holding the recorded extreme: bounds stay valid for PRUNING
@@ -2100,8 +2071,8 @@ class GraftMetadataTable(name0: String, base: GraftTable, kind: String)
         case "files" => GroupFiles.live(dir).map { g =>
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
             UTF8String.fromString(g.file),
-            g.rows.map(Long.box).orNull,
-            g.bytes.map(Long.box).orNull,
+            g.rows,
+            g.bytes,
             g.bucket.map(Int.box).orNull,
             g.part.map(UTF8String.fromString).orNull,
             g.deletes.map(_._2).getOrElse(0L),
@@ -2114,19 +2085,12 @@ class GraftMetadataTable(name0: String, base: GraftTable, kind: String)
         case "partitions" =>
           GroupFiles.live(dir).groupBy(g => (g.part, g.bucket)).toSeq
             .sortBy(_._1.toString).map { case ((part, bucket), gs) =>
-              // SUMs of per-file counters are exact only if EVERY file
-              // recorded one — a single legacy file without the token
-              // makes the rollup unknown, never silently low
-              def total(f: Group => Option[Long]): Any = {
-                val vs = gs.map(f)
-                if (vs.forall(_.isDefined)) Long.box(vs.flatten.sum) else null
-              }
               new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
                 part.map(UTF8String.fromString).orNull,
                 bucket.map(Int.box).orNull,
                 gs.size.toLong,
-                total(_.rows),
-                total(_.bytes),
+                gs.map(_.rows).sum,
+                gs.map(_.bytes).sum,
                 gs.map(_.deletes.map(_._2).getOrElse(0L)).sum))
             }
         case "tags" =>
@@ -2232,35 +2196,17 @@ class GraftScan(table: GraftTable, holder: Option[ScanHolder],
     * plan-quality lever a table format owns. Sizes come from the live
     * (statically pruned) group files; a merge-on-read vector doesn't
     * shrink its file, so masked groups are scaled by their live-row
-    * fraction. Conservative on surprise: an unreadable file size counts
-    * as its physical bytes unknown = 0 only if the file vanished
-    * mid-plan (the commit that removed it will fail this scan anyway).
+    * fraction. Both come from the manifest (`#n=`, `#z=`): planning
+    * never stats a data file.
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     memoizedStats
   private lazy val memoizedStats: org.apache.spark.sql.connector.read.Statistics = {
-    val dir = Paths.get(table.location)
-    var bytes = 0L
-    var rows = 0L
-    var allRowsKnown = true
-    groups.foreach { g =>
-      // sizes come from the manifest (#z=); stat() only for legacy lines
-      val sz = g.bytes.getOrElse(
-        try Files.size(dir.resolve(g.file)) catch { case _: Exception => 0L })
-      (g.rows, g.liveRows) match {
-        case (Some(p), Some(l)) =>
-          rows += l
-          bytes += (if (p > 0) sz * l / p else sz)
-        case _ =>
-          allRowsKnown = false
-          bytes += sz
-      }
-    }
-    val b = bytes; val r = rows; val known = allRowsKnown
+    val b = groups.map(g => if (g.rows > 0) g.bytes * g.liveRows / g.rows else g.bytes).sum
+    val r = groups.map(_.liveRows).sum
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(b)
-      override def numRows(): java.util.OptionalLong =
-        if (known) java.util.OptionalLong.of(r) else java.util.OptionalLong.empty()
+      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(r)
     }
   }
 
@@ -2349,11 +2295,10 @@ class GraftScan(table: GraftTable, holder: Option[ScanHolder],
 }
 
 /** Everything a task needs to read one group file: its path, the
-  * field-id list its columns were written under (None = pre-field-id
-  * file: its columns are the schema's id prefix), and the path of its
+  * field-id list its columns were written under, and the path of its
   * merge-on-read delete vector, if any.
   */
-case class GroupSlice(path: String, fieldIds: Option[Seq[Int]] = None,
+case class GroupSlice(path: String, fieldIds: Seq[Int],
                       dvPath: Option[String] = None)
 
 object GroupSlice {
@@ -2444,11 +2389,38 @@ object GroupRowsReader {
         s"unexpected partition type ${other.getClass.getName}")
     }
 
+  /** The next length-prefixed row payload of group file `file`, or null
+    * at a clean end. EOF is only legal at a ROW BOUNDARY — i.e. exactly
+    * BEFORE a length prefix. A torn file (truncated mid-row OR mid-prefix
+    * by disk corruption / a non-atomic copy) must fail LOUDLY: treating
+    * any EOF as a clean end would silently drop tail rows, the
+    * worst-case failure mode for a table format. The prefix is read
+    * byte-wise because readInt() throws the SAME EOFException for "no
+    * bytes at all" (clean) and "1-3 bytes left" (torn). Shared by the
+    * scan and [[GroupFiles.materializeDeletes]].
+    */
+  private[catalog] def readRow(in: DataInputStream, file: String): Array[Byte] = {
+    val b0 = in.read()
+    if (b0 < 0) return null // clean EOF at a row boundary
+    val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
+    if (b1 < 0 || b2 < 0 || b3 < 0) throw new java.io.IOException(
+      s"torn group file $file: truncated inside a row length prefix")
+    val len = (b0 << 24) | (b1 << 16) | (b2 << 8) | b3
+    require(len >= 0 && len <= (1 << 30),
+      s"group file $file: corrupt row length $len")
+    val bytes = new Array[Byte](len)
+    try in.readFully(bytes)
+    catch {
+      case e: EOFException => throw new java.io.IOException(
+        s"torn group file $file: row of $len bytes truncated mid-read", e)
+    }
+    bytes
+  }
+
   private def fileReader(slice: GroupSlice,
                          cols: Seq[ReadCol]): PartitionReader[InternalRow] =
       new PartitionReader[InternalRow] {
         private val path = slice.path
-        private val fileIds = slice.fieldIds
         private val in = new DataInputStream(new BufferedInputStream(
           Files.newInputStream(Paths.get(path))))
         // merge-on-read delete vector: sorted physical positions to mask.
@@ -2463,19 +2435,11 @@ object GroupRowsReader {
         private var rowPos = -1L
         private var dvIdx = 0
         private val numFields = in.readInt()
-        // the file's column identities, in file position order: recorded
-        // in the manifest (#f=), or — for pre-field-id files, which can
-        // only exist while ids were never re-assigned (the first DROP
-        // materializes ids on every legacy group) — the positions
-        // themselves
-        private val fids: Seq[Int] = fileIds match {
-          case Some(ids) =>
-            require(ids.length == numFields,
-              s"group file $path header width $numFields does not match its " +
-              s"manifest field ids (${ids.mkString(",")})")
-            ids
-          case None => 0 until numFields
-        }
+        // the file's column identities, in file position order (#f=)
+        private val fids: Seq[Int] = slice.fieldIds
+        require(fids.length == numFields,
+          s"group file $path header width $numFields does not match its " +
+          s"manifest field ids (${fids.mkString(",")})")
         private val row = new UnsafeRow(numFields)
         // each requested ordinal is resolved BY FIELD ID to a file
         // position (missing id — a column added after this file — reads
@@ -2514,15 +2478,10 @@ object GroupRowsReader {
           else new ReorderedRow(row, mapping,
             org.apache.spark.unsafe.types.UTF8String.fromString(
               Paths.get(path).getFileName.toString), defaults)
-        // EOF is only legal at a ROW BOUNDARY — i.e. exactly BEFORE a
-        // length prefix. A torn file (truncated mid-row OR mid-prefix by
-        // disk corruption / a non-atomic copy) must fail LOUDLY:
-        // treating any EOF as a clean end would silently drop tail rows,
-        // the worst-case failure mode for a table format. The prefix is
-        // read byte-wise because readInt() throws the SAME EOFException
-        // for "no bytes at all" (clean) and "1-3 bytes left" (torn).
         override def next(): Boolean = {
-          while (readPhysical()) {
+          var bytes = readRow(in, path)
+          while (bytes != null) {
+            row.pointTo(bytes, bytes.length)
             rowPos += 1
             // deleted position? skip it (vector and scan are both sorted)
             if (dvIdx < dv.length && dv(dvIdx) == rowPos) dvIdx += 1
@@ -2530,27 +2489,9 @@ object GroupRowsReader {
               if (reshaped != null) reshaped.pos = rowPos
               return true
             }
+            bytes = readRow(in, path)
           }
           false
-        }
-
-        private def readPhysical(): Boolean = {
-          val b0 = in.read()
-          if (b0 < 0) return false // clean EOF at a row boundary
-          val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-          if (b1 < 0 || b2 < 0 || b3 < 0) throw new java.io.IOException(
-            s"torn group file $path: truncated inside a row length prefix")
-          val len = (b0 << 24) | (b1 << 16) | (b2 << 8) | b3
-          require(len >= 0 && len <= (1 << 30),
-            s"group file $path: corrupt row length $len")
-          val bytes = new Array[Byte](len)
-          try in.readFully(bytes)
-          catch {
-            case e: EOFException => throw new java.io.IOException(
-              s"torn group file $path: row of $len bytes truncated mid-read", e)
-          }
-          row.pointTo(bytes, len)
-          true
         }
         override def get(): InternalRow =
           if (reshaped != null) reshaped else if (pad == null) row else pad

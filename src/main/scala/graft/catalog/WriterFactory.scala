@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.StructType
   * disabled).
   */
 case class GraftWriterFactory(location: String, writeSchema: StructType,
-                              bucketed: Option[(Int, Int)] = None,
-                              fieldIds: Seq[Int] = Seq.empty,
+                              bucketed: Option[(Int, Int)],
+                              fieldIds: Seq[Int],
                               partitioned: Option[(Int, String)] = None,
                               partSeq: Int = 0,
                               checks: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty)
@@ -53,9 +53,8 @@ case class GraftWriterFactory(location: String, writeSchema: StructType,
         val mins = Array.fill(longCols.length)(Long.MaxValue)
         val maxs = Array.fill(longCols.length)(Long.MinValue)
         val nonNulls = Array.fill(longCols.length)(0L)
-        // bloom per long column, keyed by STABLE FIELD ID (or position
-        // when the table predates field ids) — the equality-pruning
-        // complement to the (min,max) range stats
+        // bloom per long column, keyed by STABLE FIELD ID — the
+        // equality-pruning complement to the (min,max) range stats
         val blooms = Array.fill(longCols.length)(new GroupBloom.Builder)
         var nRows = 0L
 
@@ -82,10 +81,7 @@ case class GraftWriterFactory(location: String, writeSchema: StructType,
           Files.move(tmpPath, finalPath, StandardCopyOption.ATOMIC_MOVE)
           if (longCols.nonEmpty && nRows > 0)
             GroupBloom.write(finalPath.resolveSibling(fileName + ".bloom"),
-              longCols.indices.map { s =>
-                val id = if (fieldIds.nonEmpty) fieldIds(longCols(s)) else longCols(s)
-                id -> blooms(s).result()
-              })
+              longCols.indices.map(s => fieldIds(longCols(s)) -> blooms(s).result()))
           val stats = longCols.indices.flatMap { s =>
             if (mins(s) <= maxs(s))
               Some(writeSchema.fields(longCols(s)).name -> (mins(s), maxs(s)))
@@ -96,13 +92,13 @@ case class GraftWriterFactory(location: String, writeSchema: StructType,
               Some(writeSchema.fields(longCols(s)).name -> nonNulls(s))
             else None
           }.toMap
-          Group(fileName, stats, Some(nRows), nn, bucket,
+          Group(fileName, stats, nRows,
                 // files permanently record the field ids they were
                 // written under — the identity that keeps them readable
                 // across later RENAME/DROP COLUMN
-                if (fieldIds.nonEmpty) Some(fieldIds) else None,
+                fieldIds,
                 // size recorded once here so planning never stats files
-                deletes = None, bytes = Some(Files.size(finalPath)),
+                Files.size(finalPath), nn, bucket,
                 bloom = longCols.nonEmpty && nRows > 0,
                 part = part)
         }

@@ -247,18 +247,11 @@ object Scale {
     * the gate alone can't distinguish "filter ran" from "filter skipped".
     */
   def runtimeFilterQuery(spark: SparkSession, dir: String): DataFrame = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    val out = try {
-      spark.conf.set(keys(0), "true")
-      spark.conf.set(keys(1), "0")
-      spark.conf.set(keys(2), "-1")
+    val out = graft.Session.withConfs(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       snapshot(runtimeFilterPlan(spark, dir)) // planned and run before the confs are restored
-    } finally saved.foreach { case (k, v) =>
-      v match { case Some(s) => spark.conf.set(k, s); case None => spark.conf.unset(k) }
     }
     out.orderBy(col("l_suppkey"))
   }

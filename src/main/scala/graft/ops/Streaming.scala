@@ -139,6 +139,12 @@ object Streaming {
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "0 seconds"))).orderBy(order: _*)
 
+  /** The state store the `*_exec` stateful queries run on, set only
+    * while such a query runs.
+    */
+  private val rocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** The raw harness: `build` constructs ANY streaming DataFrame (one or
     * several sources); result is the unordered sink read.
     */
@@ -153,22 +159,15 @@ object Streaming {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true)
       val agg = build()
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val q = agg.writeStream
+      graft.Session.withConfs(spark, rocksDbState) {
+        agg.writeStream
           .format("parquet")
           .option("path", sink)
           .option("checkpointLocation", s"$base/ckpt")
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
+          .awaitTermination()
       }
       agg.schema
     }
@@ -430,11 +429,7 @@ object Streaming {
       val src = stageTimeOrderedTerciles(spark, ev, base, fs)
         .withWatermark("ts", "0 seconds")
       val agg = tumblingOn(src)
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.Session.withConfs(spark, rocksDbState) {
         val q = agg.writeStream
           .option("checkpointLocation", s"$base/ckpt")
           .outputMode("update")
@@ -451,11 +446,7 @@ object Streaming {
             ()
           }
           .start()
-        q.processAllAvailable()
-        q.stop()
-      } finally prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
+        try q.processAllAvailable() finally q.stop()
       }
       agg.schema
     }

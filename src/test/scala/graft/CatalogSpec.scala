@@ -419,7 +419,7 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
     val live = graft.catalog.GroupFiles.live(dir)
     val (masked, fresh) = live.partition(g => before(g.file))
     assert(masked.size === 1 && masked.head.deletes.map(_._2) === Some(10L))
-    assert(fresh.nonEmpty && fresh.flatMap(_.rows).sum === 10L)
+    assert(fresh.nonEmpty && fresh.map(_.rows).sum === 10L)
     assert(spark.table(T).count() === 100)
     assert(spark.sql(s"SELECT count(*) FROM $T WHERE v = 'upd'").head().getLong(0) === 10)
     assert(spark.sql(s"SELECT CAST(SUM(k) AS BIGINT) FROM $T WHERE v = 'upd'")
@@ -1345,21 +1345,44 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
     assert(spark.table("graft_fb.default.fb_torn").count() === 1000)
     val cat = spark.sessionState.catalogManager.catalog("graft_fb")
       .asInstanceOf[graft.catalog.GraftCatalog]
-    val dir = Paths.get(cat.loadTable(org.apache.spark.sql.connector.catalog.Identifier
+    def tableDir() = Paths.get(cat.loadTable(org.apache.spark.sql.connector.catalog.Identifier
       .of(Array("default"), "fb_torn")).asInstanceOf[graft.catalog.GraftTable].location)
     // truncate the largest group file mid-row (drop the last 7 bytes)
-    val rows = Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".rows")).maxBy(Files.size)
-    Files.write(rows, Files.readAllBytes(rows).dropRight(7))
+    def tearLargestGroup(): Unit = {
+      val rows = Files.list(tableDir()).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".rows")).maxBy(Files.size)
+      Files.write(rows, Files.readAllBytes(rows).dropRight(7))
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    tearLargestGroup()
     // sum(k) cannot be served from the manifest — it must open the file
     // (count(*) alone would now be answered by the aggregate pushdown!)
     val e = intercept[org.apache.spark.SparkException] {
       spark.sql("SELECT sum(k) FROM graft_fb.default.fb_torn").head()
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("torn group file")),
       s"expected a loud torn-file error, got: ${messages(e).mkString(" | ")}")
+    spark.sql("DROP TABLE graft_fb.default.fb_torn")
+
+    // materialize_deletes reads masked groups through the same row
+    // reader: a torn one fails the CALL and the live manifest stays as
+    // it was
+    spark.sql("CREATE TABLE graft_fb.default.fb_torn (k BIGINT, v STRING)")
+    spark.sql("INSERT INTO graft_fb.default.fb_torn SELECT id, repeat('x', 50) FROM range(1000)")
+    spark.sql("DELETE FROM graft_fb.default.fb_torn WHERE k % 7 = 0")
+    val dir = tableDir()
+    assert(graft.catalog.GroupFiles.live(dir).forall(_.deletes.isDefined),
+      "the DELETE must leave a vector on every group")
+    val manifestBefore = Files.readAllBytes(dir.resolve("manifest"))
+    tearLargestGroup()
+    val e2 = intercept[Exception] {
+      spark.sql("CALL graft_fb.system.materialize_deletes('default.fb_torn')").collect()
+    }
+    assert(messages(e2).exists(_.contains("torn group file")),
+      s"expected a loud torn-file error, got: ${messages(e2).mkString(" | ")}")
+    assert(java.util.Arrays.equals(Files.readAllBytes(dir.resolve("manifest")), manifestBefore),
+      "a failed materialize_deletes must not change the live manifest")
     spark.sql("DROP TABLE graft_fb.default.fb_torn")
   }
 
@@ -1431,7 +1454,7 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
       // minimal valid group file: 1-field header, zero rows
       val out = new java.io.DataOutputStream(Files.newOutputStream(dir.resolve(name)))
       out.writeInt(1); out.close()
-      Group(name, Map.empty)
+      Group(name, Map.empty, rows = 0L, fieldIds = Seq(0), bytes = 4L)
     }
     try {
       val (a, b) = (mkGroup("a.rows"), mkGroup("b.rows"))
@@ -1484,14 +1507,30 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
       // a column name carrying every manifest delimiter: stats must be
       // skipped at write (no pruning), NOT corrupt the manifest
       GroupFiles.publish(dir, Seq(Group("g.rows",
-        Map("a=b:c" -> (1L, 2L), "ok" -> (3L, 4L)))))
+        Map("a=b:c" -> (1L, 2L), "ok" -> (3L, 4L)), rows = 0L, fieldIds = Seq(0), bytes = 4L)))
       val round = GroupFiles.live(dir)
       assert(round.map(_.file) === Seq("g.rows"))
       assert(round.head.stats === Map("ok" -> (3L, 4L)))
-      // hand-corrupted stats tokens: dropped, never a crash
-      Files.write(dir.resolve("manifest"),
-        "g.rows\tbroken\tx=1\ty=1:zz\tok=5:6".getBytes("UTF-8"))
+      // hand-corrupted stats tokens: dropped, never a crash (they only
+      // prune)
+      val manifest = dir.resolve("manifest")
+      val required = Seq("#n=0", "#f=0", "#z=4")
+      def writeLine(tokens: Seq[String]): Unit =
+        Files.write(manifest, ("g.rows\t" + tokens.mkString("\t")).getBytes("UTF-8"))
+      writeLine(required ++ Seq("broken", "x=1", "y=1:zz", "ok=5:6"))
       assert(GroupFiles.live(dir).head.stats === Map("ok" -> (5L, 6L)))
+      // a missing or malformed REQUIRED token fails loudly, naming the
+      // manifest, the group file and the token
+      for ((tok, bad) <- Seq("#n=" -> "#n=x", "#f=" -> "#f=0,y", "#z=" -> "#z=")) {
+        val missing = required.filterNot(_.startsWith(tok))
+        val malformed = required.map(t => if (t.startsWith(tok)) bad else t)
+        for (tokens <- Seq(missing, malformed)) {
+          writeLine(tokens)
+          val e = intercept[IllegalStateException](GroupFiles.live(dir))
+          assert(e.getMessage.contains(manifest.toString) && e.getMessage.contains("g.rows") &&
+            e.getMessage.contains(tok), e.getMessage)
+        }
+      }
     } finally GroupFiles.delete(dir)
   }
 
