@@ -23,31 +23,23 @@ object Bench {
     }
     // ...but TIME the warm-up anyway: for the run-once keys (streaming
     // executions, the IVM commit chain) the FIRST call does the real work
-    // behind a session-conf marker and every later call re-reads a sink —
+    // through graft.Session.once and every later call re-reads a sink —
     // publishing only the steady-state number would misread as "a
     // streaming job costs 0.2 s" (VERDICT r10 "wrong" #2). first_run_s
     // below carries the honest one-off cost for exactly those keys.
+    // One pass over every selected query, seconds per query. A failing
+    // query must NOT pass off its elapsed-to-failure time as a benchmark
+    // result — failures are tracked and published in the JSON.
     val failed = scala.collection.mutable.SortedSet[String]()
-    val firstRun: Map[String, Double] = selected.map { case (name, fn) =>
+    def pass(label: String): Map[String, Double] = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count() catch { case e: Throwable =>
         failed += name
-        System.err.println(s"[bench] $name FAILED (first run): ${e.getMessage}")
+        System.err.println(s"[bench] $name FAILED$label: ${e.getMessage}")
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // two timed passes, min per query: local-machine contention adds
-    // ±15-20% noise to any single pass; the min is the steady-state cost.
-    // A failing query must NOT pass off its elapsed-to-failure time as a
-    // benchmark result — failures are tracked and published in the JSON.
-    def timedPass(): Map[String, Double] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val firstRun = pass(" (first run)")
     // SPARK_GRAFT_PROBE=1: publish the first (cold) pass as the result and
     // skip the two steady-state passes — for SCALE PROBES (sf10 dedup
     // ratios) where the work per pass is tens of minutes and the quantity
@@ -57,7 +49,9 @@ object Bench {
     val results =
       if (probe) firstRun
       else {
-        val (p1, p2) = (timedPass(), timedPass())
+        // two timed passes, min per query: local-machine contention adds
+        // ±15-20% noise to any single pass; the min is the steady-state cost
+        val (p1, p2) = (pass(""), pass(""))
         p1.map { case (k, v) => k -> math.min(v, p2(k)) }
       }
     // 3-decimal (ms) precision: sub-ms digits are pure noise on a shared

@@ -45,6 +45,38 @@ object Session {
     }
   }
 
+  /** The one scratch directory of `name`: `<java.io.tmpdir>/graft_<name>`.
+    * A fixed path per purpose, reused by every run, so repeated
+    * Verify/Bench passes keep one disk footprint instead of leaking a
+    * fresh temp dir per call.
+    */
+  def scratch(name: String): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_$name").getAbsolutePath
+
+  /** Build session state once per (session, source dir) and read it back
+    * on every later call: the seam of every key whose first call does
+    * the real work (the streaming `*_exec` runs, the IVM commit chain,
+    * the catalog and bucketed layouts). The session conf
+    * `graft.once.<name>` holds `dir` and the payload `build` returned;
+    * a call with another `dir` rebuilds. Before it builds, `once` wipes
+    * `scratch(name)`, so a stale sink or append log can never leak into
+    * the new state. The marker is set only after `build` returns, so a
+    * build that throws is retried on the next call.
+    */
+  def once(spark: SparkSession, name: String, dir: String)(build: => String): String = {
+    val key = s"graft.once.$name"
+    // length-prefixed, so no dir can pose as another dir plus payload
+    val source = s"${dir.length}:$dir"
+    spark.conf.getOption(key).filter(_.startsWith(source)) match {
+      case Some(marker) => marker.substring(source.length)
+      case None =>
+        graft.io.Sinks.deleteRecursively(java.nio.file.Paths.get(scratch(name)))
+        val payload = build
+        spark.conf.set(key, source + payload)
+        payload
+    }
+  }
+
   /** A local session on `cpus` cores with WARN logging. */
   def local(cpus: Int): SparkSession = {
     val spark = configure(cpus).getOrCreate()

@@ -301,7 +301,7 @@ object SparkEntry {
   )
 
   /** Keys whose FIRST call does the real work (a streaming execution or
-    * the IVM commit chain, behind a session-conf marker) while every later
+    * the IVM commit chain, through `Session.once`) while every later
     * call re-reads its result: every `_exec` key plus q_incremental_view.
     * Bench publishes their first-call time as `first_run_s`.
     */

@@ -1,7 +1,7 @@
 package graft.catalog
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.io.{BufferedInputStream, DataInputStream}
+import java.nio.file.{Files, Path}
 
 /** Per-group BLOOM FILTER sidecars (`<group>.bloom`) over the long-typed
   * columns, built STREAMING during the write and consulted at plan time
@@ -111,26 +111,16 @@ object GroupBloom {
   }
 
   /** Write a sidecar: per-field-id filters, atomic move. */
-  def write(path: Path, perField: Seq[(Int, Array[Long])]): Unit = {
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    try {
-      val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp)))
-      try {
-        out.writeInt(MAGIC)
-        out.writeInt(perField.length)
-        perField.foreach { case (id, words) =>
-          out.writeInt(id)
-          out.writeInt(words.length)
-          words.foreach(out.writeLong)
-        }
-      } finally out.close()
-      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      // a half-written tmp is referenced by nothing and swept by nothing:
-      // clean it here or it leaks forever
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
+  def write(path: Path, perField: Seq[(Int, Array[Long])]): Unit =
+    GroupFiles.publishFile(path) { out =>
+      out.writeInt(MAGIC)
+      out.writeInt(perField.length)
+      perField.foreach { case (id, words) =>
+        out.writeInt(id)
+        out.writeInt(words.length)
+        words.foreach(out.writeLong)
+      }
     }
-  }
 
   /** Read a sidecar; a malformed file reads as "no blooms" (pruning is
     * an optimization — never a correctness dependency).

@@ -24,7 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * dataflow (ops.Merge.upsert). Register with
   * `spark.sql.catalog.<name> = graft.catalog.GraftCatalog`; the warehouse
   * directory comes from `spark.sql.catalog.<name>.warehouse` (defaults to
-  * a fixed dir under java.io.tmpdir).
+  * `graft.Session.scratch("catalog_<name>")`).
   *
   * Storage is a minimal table FORMAT, not driver memory: each table is a
   * directory of immutable row-group files plus a `manifest` listing the
@@ -87,8 +87,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     with ProcedureCatalog {
 
   private var catalogName: String = "graft"
-  private var warehouse: Path =
-    Paths.get(System.getProperty("java.io.tmpdir"), "graft_catalog")
+  private var warehouse: Path = Paths.get(graft.Session.scratch("catalog"))
   // the table registry is keyed by WAREHOUSE, not held per instance:
   // Spark re-instantiates catalog plugins in cloned sessions (streaming
   // micro-batches run in one; spark.newSession() makes another), and an
@@ -103,8 +102,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    warehouse = Paths.get(Option(options.get("warehouse")).getOrElse(
-      Paths.get(System.getProperty("java.io.tmpdir"), s"graft_catalog_$name").toString))
+    warehouse = Paths.get(Option(options.get("warehouse"))
+      .getOrElse(graft.Session.scratch(s"catalog_$name")))
   }
   override def name(): String = catalogName
 
@@ -1051,7 +1050,8 @@ object GroupFiles {
         s"invalid tag name '$name': letters/digits/-_. only, not all digits")
       require(versions(dir).contains(v),
         s"cannot tag version $v: not a retained snapshot (have ${versions(dir).mkString(", ")})")
-      writeAtomic(dir, TAG + name, v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      publishFile(dir.resolve(TAG + name))(
+        _.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     }
 
   /** Drop a tag; returns whether it existed. The snapshot it pinned
@@ -1203,6 +1203,24 @@ object GroupFiles {
     !c.startsWith("#") &&
     !c.exists(ch => ch == '=' || ch == ':' || ch == '\t' || ch == '\n' || ch == '\r')
 
+  /** The one way the catalog writes a file: `fill` writes `<path>.tmp`,
+    * which then moves onto `path` (ATOMIC_MOVE, replacing), so readers
+    * see the whole file or none of it. Snapshots MUST go through this
+    * too — history()/VERSION AS OF readers parse snapshot files outside
+    * the commit lock, and a plain Files.write would let them observe a
+    * half-written (silently truncated) live set. On any failure the tmp
+    * is deleted: an unpublished file is referenced by no manifest, so no
+    * sweep would ever find it.
+    */
+  private[catalog] def publishFile(path: Path)(fill: DataOutputStream => Unit): Unit = {
+    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
+    try {
+      val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp)))
+      try fill(out) finally out.close()
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+  }
+
   /** Atomically publish `groups` as the new live set, snapshot it as
     * `manifest.v<k+1>`, then expire snapshots beyond [[RETAIN]] and delete
     * the group files no retained snapshot (nor the new live set)
@@ -1211,18 +1229,6 @@ object GroupFiles {
     * on local/HDFS-style filesystems hold the open handle. Files never yet
     * referenced by any manifest (in-flight writer output) are never swept.
     */
-  /** Atomic small-file write: tmp + ATOMIC_MOVE. Snapshots MUST go
-    * through this too — history()/VERSION AS OF readers parse snapshot
-    * files outside the commit lock, and a plain Files.write would let
-    * them observe a half-written (silently truncated) live set.
-    */
-  private def writeAtomic(dir: Path, name: String, bytes: Array[Byte]): Unit = {
-    val tmp = dir.resolve(name + ".tmp")
-    Files.write(tmp, bytes)
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE,
-               StandardCopyOption.REPLACE_EXISTING)
-  }
-
   def publish(dir: Path, groups: Seq[Group]): Unit = {
     val old = live(dir)
     // Heal a crash that landed between the live-manifest swap and its
@@ -1238,7 +1244,7 @@ object GroupFiles {
         case Some(v) => !java.util.Arrays.equals(
           liveBytes, Files.readAllBytes(dir.resolve(s"$MANIFEST.v$v")))
       }
-      if (healNeeded) writeAtomic(dir, s"$MANIFEST.v${version(dir) + 1}", liveBytes)
+      if (healNeeded) publishFile(dir.resolve(s"$MANIFEST.v${version(dir) + 1}"))(_.write(liveBytes))
     }
     val lines = groups.map { g =>
       (g.file +:
@@ -1255,10 +1261,10 @@ object GroupFiles {
         .mkString("\t")
     }
     val bytes = lines.mkString("\n").getBytes("UTF-8")
-    writeAtomic(dir, MANIFEST, bytes)
+    publishFile(dir.resolve(MANIFEST))(_.write(bytes))
     // commit point passed — record the snapshot and expire old ones
     val newV = version(dir) + 1
-    writeAtomic(dir, s"$MANIFEST.v$newV", bytes)
+    publishFile(dir.resolve(s"$MANIFEST.v$newV"))(_.write(bytes))
     dropSnapshotsBefore(dir, newV - RETAIN + 1, refs(old), Some(groups))
   }
 
@@ -1347,10 +1353,7 @@ object GroupFiles {
   def writeDeleteVector(dir: Path, positions: Array[Long]): String = {
     require(positions.nonEmpty, "empty delete vector")
     val name = s"dv-${java.util.UUID.randomUUID()}.pos"
-    val tmp = dir.resolve(name + ".tmp")
-    val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp)))
-    try positions.foreach(out.writeLong) finally out.close()
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    publishFile(dir.resolve(name))(out => positions.foreach(out.writeLong))
     name
   }
 
@@ -1446,26 +1449,26 @@ object GroupFiles {
         case Some((dvName, _)) =>
           val dv = readDeleteVector(dir, dvName)
           val newName = s"part-mat-${java.util.UUID.randomUUID()}.rows"
-          val in = new DataInputStream(new BufferedInputStream(
-            Files.newInputStream(dir.resolve(g.file))))
-          val tmp = dir.resolve(newName + ".tmp")
-          val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp)))
-          var kept = 0L; var pos = 0L; var di = 0
-          try {
-            out.writeInt(in.readInt())
-            // the scan reader's torn-file discipline: rewriting a torn
-            // file as "clean" would launder the corruption
-            var bytes = GroupRowsReader.readRow(in, g.file)
-            while (bytes != null) {
-              if (di < dv.length && dv(di) == pos) di += 1
-              else { out.writeInt(bytes.length); out.write(bytes); kept += 1 }
-              pos += 1
-              bytes = GroupRowsReader.readRow(in, g.file)
-            }
-          } finally { in.close(); out.close() }
-          require(pos == g.rows,
-            s"group ${g.file} holds $pos rows but the manifest records ${g.rows} — torn file")
-          Files.move(tmp, dir.resolve(newName), StandardCopyOption.ATOMIC_MOVE)
+          var kept = 0L
+          publishFile(dir.resolve(newName)) { out =>
+            val in = new DataInputStream(new BufferedInputStream(
+              Files.newInputStream(dir.resolve(g.file))))
+            var pos = 0L; var di = 0
+            try {
+              out.writeInt(in.readInt())
+              // the scan reader's torn-file discipline: rewriting a torn
+              // file as "clean" would launder the corruption
+              var bytes = GroupRowsReader.readRow(in, g.file)
+              while (bytes != null) {
+                if (di < dv.length && dv(di) == pos) di += 1
+                else { out.writeInt(bytes.length); out.write(bytes); kept += 1 }
+                pos += 1
+                bytes = GroupRowsReader.readRow(in, g.file)
+              }
+            } finally in.close()
+            require(pos == g.rows,
+              s"group ${g.file} holds $pos rows but the manifest records ${g.rows} — torn file")
+          }
           g.copy(file = newName, rows = kept, nonNull = Map.empty, deletes = None,
                  bytes = Files.size(dir.resolve(newName)), bloom = false)
       }
@@ -1517,24 +1520,20 @@ object GroupFiles {
       else {
         val members = bin.toSeq
         val merged = s"compact-${java.util.UUID.randomUUID()}.rows"
-        val outStream = new DataOutputStream(new BufferedOutputStream(
-          Files.newOutputStream(dir.resolve(merged + ".tmp"))))
         var headerFields = -1
-        try members.foreach { m =>
+        publishFile(dir.resolve(merged)) { out => members.foreach { m =>
           val in = new DataInputStream(new BufferedInputStream(
             Files.newInputStream(dir.resolve(m.file))))
           try {
             val nf = in.readInt()
-            if (headerFields < 0) { headerFields = nf; outStream.writeInt(nf) }
+            if (headerFields < 0) { headerFields = nf; out.writeInt(nf) }
             else require(nf == headerFields,
               s"cannot compact groups with differing field counts ($nf vs $headerFields)")
             val buf = new Array[Byte](64 * 1024)
             var n = in.read(buf)
-            while (n >= 0) { outStream.write(buf, 0, n); n = in.read(buf) }
+            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
           } finally in.close()
-        } finally outStream.close()
-        Files.move(dir.resolve(merged + ".tmp"), dir.resolve(merged),
-                   StandardCopyOption.ATOMIC_MOVE)
+        } }
         // per-column union, only for columns every member has stats for
         val cols = members.map(_.stats.keySet).reduce(_ intersect _)
         val stats = cols.map { c =>

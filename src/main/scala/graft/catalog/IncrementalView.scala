@@ -359,18 +359,14 @@ object IncrementalView {
                            dims: Seq[String], sums: Seq[String],
                            checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     var at = materialize(stage.sparkSession, baseTable, viewTable, dims, sums)
-    stage.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // empty recovery/idle batches commit nothing and refresh nothing
-        if (!batch.isEmpty) {
-          graft.ops.Streaming.applyCdcBatch(batch, batchId, baseTable, pk, seqCol)
-          at = refreshMaterialized(batch.sparkSession, baseTable, viewTable,
-                                   dims, sums, at)
-        }
-        ()
+    graft.ops.Streaming.foreachBatchQuery(stage, checkpoint) { (batch, batchId) =>
+      // empty recovery/idle batches commit nothing and refresh nothing
+      if (!batch.isEmpty) {
+        graft.ops.Streaming.applyCdcBatch(batch, batchId, baseTable, pk, seqCol)
+        at = refreshMaterialized(batch.sparkSession, baseTable, viewTable,
+                                 dims, sums, at)
       }
-      .start()
+    }
   }
 
   private def currentVersion(spark: SparkSession, qualifiedName: String): Long = {

@@ -105,7 +105,7 @@ object Sinks {
     writes.foreach { case (_, path) => deleteRecursively(Paths.get(path + ".__old")) }
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Det._
@@ -28,27 +27,19 @@ object Etl {
     * same aggregate straight off parquet, proving the roundtrip lossless.
     * The write happens eagerly; the returned plan reads only the CSV.
     */
-  /** One fixed scratch directory per purpose under java.io.tmpdir —
-    * Spark's overwrite mode replaces the contents on every run, so repeated
-    * Verify/Bench invocations reuse the same disk footprint instead of
-    * leaking a populated temp dir each time.
-    */
-  private def scratchDir(name: String): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"), name)
-
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // FIXED scratch path, overwritten each run: a fresh createTempDirectory
-    // per invocation accumulates populated dirs forever (deleteOnExit is a
-    // no-op on non-empty directories), and Verify+Bench call this dozens of
-    // times per round
-    val tmp = scratchDir("graft_csv_roundtrip")
+    // FIXED scratch path (Spark's overwrite mode replaces the contents):
+    // a fresh createTempDirectory per invocation accumulates populated
+    // dirs forever (deleteOnExit is a no-op on non-empty directories), and
+    // Verify+Bench call this dozens of times per round
+    val tmp = graft.Session.scratch("csv_roundtrip")
     val slice = Sources.lineitem(spark, dir).filter(col("l_orderkey") % 5 === 0)
     slice.write.mode("overwrite")
       .option("header", "true").option("nullValue", "")
       // timestampFormat with micros so ns-truncated shipdates survive
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      .csv(tmp.getAbsolutePath)
-    Sources.csv(spark, tmp.getAbsolutePath, Schemas.lineitem)
+      .csv(tmp)
+    Sources.csv(spark, tmp, Schemas.lineitem)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
            moneySum(col("l_quantity")).as("sum_qty"),
@@ -64,10 +55,10 @@ object Etl {
     * in at scale.
     */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_json_roundtrip")
+    val tmp = graft.Session.scratch("json_roundtrip")
     Sources.documents(spark, dir).filter(col("doc_id") % 3 === 0)
-      .write.mode("overwrite").json(tmp.getAbsolutePath)
-    Sources.jsonLines(spark, tmp.getAbsolutePath, Schemas.documents)
+      .write.mode("overwrite").json(tmp)
+    Sources.jsonLines(spark, tmp, Schemas.documents)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
            countDistinct(col("source")).as("n_sources"))
@@ -96,7 +87,7 @@ object Etl {
     * it) and pass it explicitly instead of re-sniffing.
     */
   def schemaMerge(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_schema_merge")
+    val tmp = graft.Session.scratch("schema_merge")
     val o = Sources.orders(spark, dir)
     o.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -114,10 +105,10 @@ object Etl {
   }
 
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_orc_roundtrip")
+    val tmp = graft.Session.scratch("orc_roundtrip")
     Sources.orders(spark, dir).filter(col("o_orderkey") % 7 === 0)
-      .write.mode("overwrite").orc(tmp.getAbsolutePath)
-    spark.read.schema(Schemas.orders).orc(tmp.getAbsolutePath)
+      .write.mode("overwrite").orc(tmp)
+    spark.read.schema(Schemas.orders).orc(tmp)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
            moneySum(col("o_totalprice")).as("sum_price"),
@@ -135,13 +126,13 @@ object Etl {
     * tag like any text source.
     */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = scratchDir("graft_xml_roundtrip")
+    val tmp = graft.Session.scratch("xml_roundtrip")
     Sources.part(spark, dir).filter(col("p_partkey") % 4 === 0)
       .write.mode("overwrite")
       .option("rootTag", "parts").option("rowTag", "part")
-      .xml(tmp.getAbsolutePath)
+      .xml(tmp)
     spark.read.option("rowTag", "part").schema(Schemas.part)
-      .xml(tmp.getAbsolutePath)
+      .xml(tmp)
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n"),
            moneySum(col("p_retailprice")).as("sum_price"),
@@ -151,30 +142,21 @@ object Etl {
 
   /** Hive-layout scratch table for the partition-pruning surface: orders
     * written partitioned by order month (`o_month=yyyy-MM/` directories)
-    * via Sinks.writePartitioned. Overwritten in place on every call (same
-    * fixed-scratch-dir policy as the other roundtrips). At 100 TB this
+    * via Sinks.writePartitioned. Built once per (session, source dir)
+    * through `graft.Session.once`, so repeated Bench/Verify passes time
+    * the PRUNED READ (the key's subject), not a rewrite. At 100 TB this
     * layout IS the table design: a month predicate must skip whole
     * directories at planning time instead of scanning 84 months of data.
     */
   def partitionedOrdersPath(spark: SparkSession, dir: String): String = {
-    val tmp = scratchDir("graft_partitioned_orders")
-    // source-marker skip: the testdata is immutable, so if the layout was
-    // already built from THIS source dir, reuse it — repeated Bench/Verify
-    // passes then time the PRUNED READ (the key's subject), not a rewrite
-    val marker = new java.io.File(tmp, "_graft_source")
-    // the marker carries source dir AND a layout version: bump the version
-    // whenever the partition column/schema below changes, or a persistent
-    // tmpdir from a previous code revision would be served stale
-    val stamp = dir + "|layout-v1:o_month=yyyy-MM"
-    val current = if (marker.exists())
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") else ""
-    if (current != stamp) {
+    val tmp = graft.Session.scratch("partitioned_orders")
+    graft.Session.once(spark, "partitioned_orders", dir) {
       val orders = Sources.orders(spark, dir)
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-      graft.io.Sinks.writePartitioned(orders, tmp.getAbsolutePath, Seq("o_month"), 1000000L)
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
+      graft.io.Sinks.writePartitioned(orders, tmp, Seq("o_month"), 1000000L)
+      ""
     }
-    tmp.getAbsolutePath
+    tmp
   }
 
   /** The schema of the layout `partitionedOrdersPath` writes: orders plus
@@ -236,10 +218,9 @@ object Etl {
     * q_bucket_join gates the bucketed layout.
     */
   def partitionCatalog(spark: SparkSession, dir: String): DataFrame = {
-    val confKey = "graft.partition.catalog.src"
     val T = "graft_ev.default.events_by_day"
     spark.conf.set("spark.sql.catalog.graft_ev", "graft.catalog.GraftCatalog")
-    if (!spark.conf.getOption(confKey).contains(dir)) {
+    graft.Session.once(spark, "partition_catalog", dir) {
       spark.sql(s"DROP TABLE IF EXISTS $T")
       spark.sql(s"""CREATE TABLE $T (event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT,
                     event_type STRING, value DOUBLE)
@@ -250,7 +231,7 @@ object Etl {
         .createOrReplaceTempView(src)
       spark.sql(s"INSERT INTO $T SELECT * FROM $src")
       spark.catalog.dropTempView(src)
-      spark.conf.set(confKey, dir)
+      ""
     }
     spark.table(T)
       .filter(col("ts") >= lit("2024-01-10").cast("timestamp_ntz") &&

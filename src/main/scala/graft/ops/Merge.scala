@@ -230,11 +230,12 @@ object Merge {
     */
   def incrementalViewQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.catalog.IncrementalView
-    val confKey = "graft.ivm.query.src"
     val T = "graft_ivmq.default.orders_ivm"
     spark.conf.set("spark.sql.catalog.graft_ivmq", "graft.catalog.GraftCatalog")
     val dims = Seq("pri"); val sums = Seq("cents")
-    if (!spark.conf.getOption(confKey).contains(dir)) {
+    // the marker's payload is the three commit versions "v1,v2,v3"
+    val versions = graft.Session.once(spark, "incremental_view", dir) {
+      def version() = tableVersion(spark, "graft_ivmq", "orders_ivm")
       spark.sql(s"DROP TABLE IF EXISTS $T")
       spark.sql(s"CREATE TABLE $T (o_orderkey BIGINT, pri STRING, cents BIGINT)")
       val src = "graft_ivm_src"
@@ -244,17 +245,14 @@ object Merge {
             .otherwise(cents(col("o_totalprice"))).as("cents"))
         .createOrReplaceTempView(src)
       spark.sql(s"INSERT INTO $T SELECT * FROM $src WHERE o_orderkey % 3 = 0")
-      spark.conf.set("graft.ivm.query.v1", tableVersion(spark, "graft_ivmq", "orders_ivm").toString)
+      val v1 = version()
       spark.sql(s"INSERT INTO $T SELECT * FROM $src WHERE o_orderkey % 3 = 1")
-      spark.conf.set("graft.ivm.query.v2", tableVersion(spark, "graft_ivmq", "orders_ivm").toString)
+      val v2 = version()
       spark.sql(s"DELETE FROM $T WHERE o_orderkey % 5 = 0")
-      spark.conf.set("graft.ivm.query.v3", tableVersion(spark, "graft_ivmq", "orders_ivm").toString)
       spark.catalog.dropTempView(src)
-      spark.conf.set(confKey, dir)
+      s"$v1,$v2,${version()}"
     }
-    val v1 = spark.conf.get("graft.ivm.query.v1").toLong
-    val v2 = spark.conf.get("graft.ivm.query.v2").toLong
-    val v3 = spark.conf.get("graft.ivm.query.v3").toLong
+    val Array(v1, v2, v3) = versions.split(",").map(_.toLong)
     spark.sql(s"SELECT * FROM $T VERSION AS OF $v1").createOrReplaceTempView("graft_ivm_v1")
     val seeded = IncrementalView.build(spark, "graft_ivm_v1", dims, sums)
     val s2 = IncrementalView.refresh(spark, T, dims, sums, seeded, v1, v2)

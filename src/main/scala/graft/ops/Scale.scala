@@ -112,13 +112,12 @@ object Scale {
     * Exchange on either side (asserted in PlanGateSpec). This is THE
     * repeated-fact-join layout at 100 TB: the shuffle is paid once at
     * write time, never per query. The bucketed twins are built once per
-    * (session, source dir) — a session-conf marker skips the rebuild so
-    * steady-state runs time the join, not the layout.
+    * (session, source dir) through `graft.Session.once`, so steady-state
+    * runs time the join, not the layout.
     */
   def bucketJoinQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.moneySum
-    val confKey = "graft.bucketed.src"
-    if (!spark.conf.getOption(confKey).contains(dir)) {
+    graft.Session.once(spark, "bucket_join", dir) {
       // a PREVIOUS JVM's warehouse directory survives while the in-memory
       // catalog does not — saveAsTable then fails LOCATION_ALREADY_EXISTS;
       // drop the entry AND clear the leftover location before writing
@@ -131,7 +130,7 @@ object Scale {
       writeBucketed(
         graft.io.Sources.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment")),
         "graft_b_customer", Seq("c_custkey"), 8, Seq("c_custkey"))
-      spark.conf.set(confKey, dir)
+      ""
     }
     spark.table("graft_b_orders").hint("merge")
       .join(spark.table("graft_b_customer"), col("o_custkey") === col("c_custkey"))

@@ -315,28 +315,13 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** SimHash of text tokens: 64-bit signature where bit b is the sign of
-    * the sum over tokens of ±1 (from xxhash64(token) bit b). Near-dup
-    * texts → small Hamming distance.
-    */
-  def simHash(textToks: Column, bits: Int = 16): Column = {
-    val sums = (0 until bits).map { b =>
-      val contrib = aggregate(textToks, lit(0.0),
-        (acc, t) => acc +
-          when(pmod(shiftright(xxhash64(t), b), lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0)))
-      when(contrib >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    sums.reduce(_ + _)
-  }
-
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b)).cast("long")
 
   /** Engine-PORTABLE SimHash (q_dedup_simhash): bit b of the signature is
     * the sign of Σ_tokens ±1, where the ±1 comes from bit (b%4) of the
     * md5 hex digit at position 1+b/4 — nibble value recovered by ascii
-    * arithmetic (md5 renders lowercase hex in every engine). `simHash`
-    * above is the faster xxhash64 in-engine form; this one is
-    * oracle-declarable because md5/ascii/shift agree across engines.
+    * arithmetic (md5 renders lowercase hex in every engine), so it is
+    * oracle-declarable: md5/ascii/shift agree across engines.
     */
   def simHashMd5(toks: Column, bits: Int = 16): Column = {
     val hs = transform(toks, t => md5(t))

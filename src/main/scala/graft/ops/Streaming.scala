@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.Det._
@@ -112,29 +113,30 @@ object Streaming {
     * closure predicate (win_end <= max(ts)) to the q_stream_tumbling SQL —
     * the declared semantics ARE the append-mode contract.
     *
-    * The job runs once per (session, source dir) behind a conf marker
-    * (the bucketed-twin pattern); sink + checkpoint are wiped first so a
-    * stale append log can never double rows. Scale: state is bounded by
-    * (open windows × event_type); the sink is partition-parallel parquet;
+    * The job runs once per (session, source dir) through
+    * `graft.Session.once`, which wipes the key's `Session.scratch` dir
+    * (sink + checkpoint) first so a stale append log can never double
+    * rows. Scale: state is bounded by (open windows × event_type); the
+    * sink is partition-parallel parquet;
     * state lives in ROCKSDB for the run (the provider a 1000-executor
     * deployment uses — heap state caps at executor memory, RocksDB
     * spills; StreamingSpec proves heap/RocksDB equivalence separately).
     */
   def streamExec(spark: SparkSession, dir: String): DataFrame =
-    runStreamOnce(spark, dir, "graft_stream_exec", "streamExec",
+    runStreamOnce(spark, dir, "stream_exec",
       src => tumblingOn(src), Seq(col("win_us"), col("event_type")))
 
   /** Shared once-per-(session, dir) streaming harness for the declared
-    * `*_exec` keys: wipe sink+checkpoint, run the file-source micro-batch
-    * job (append mode, watermark 0s, AvailableNow) with RocksDB state,
-    * then read the sink back. The watermark cast: watermarks require
-    * TIMESTAMP (ltz); the source ts is ntz — with the session pinned to
-    * UTC the cast is epoch-identical.
+    * `*_exec` keys: run the file-source micro-batch job (append mode,
+    * watermark 0s, AvailableNow) with RocksDB state, then read the sink
+    * back. The watermark cast: watermarks require TIMESTAMP (ltz); the
+    * source ts is ntz — with the session pinned to UTC the cast is
+    * epoch-identical.
     */
-  private def runStreamOnce(spark: SparkSession, dir: String, prefix: String,
-                            markerName: String, plan: DataFrame => DataFrame,
+  private def runStreamOnce(spark: SparkSession, dir: String, name: String,
+                            plan: DataFrame => DataFrame,
                             order: Seq[Column]): DataFrame =
-    runStreamOnceRaw(spark, dir, prefix, markerName, () => plan(
+    runStreamOnceRaw(spark, dir, name, _ => plan(
       eventsStream(spark, dir)
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "0 seconds"))).orderBy(order: _*)
@@ -146,23 +148,17 @@ object Streaming {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The raw harness: `build` constructs ANY streaming DataFrame (one or
-    * several sources); result is the unordered sink read.
+    * several sources) from the scratch dir; result is the unordered sink
+    * read.
     */
-  private def runStreamOnceRaw(spark: SparkSession, dir: String, prefix: String,
-                               markerName: String,
-                               build: () => DataFrame): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = sys.props("java.io.tmpdir") + s"/${prefix}_$tag"
-    val sink = s"$base/sink"
-    val schema = runOnce(spark, s"graft.$markerName.done.$tag") {
-      val p = new org.apache.hadoop.fs.Path(base)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      val agg = build()
+  private def runStreamOnceRaw(spark: SparkSession, dir: String, name: String,
+                               build: String => DataFrame): DataFrame =
+    builtOnce(spark, dir, name, "sink") { base =>
+      val agg = build(base)
       graft.Session.withConfs(spark, rocksDbState) {
         agg.writeStream
           .format("parquet")
-          .option("path", sink)
+          .option("path", s"$base/sink")
           .option("checkpointLocation", s"$base/ckpt")
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -171,22 +167,20 @@ object Streaming {
       }
       agg.schema
     }
-    spark.read.schema(schema).parquet(sink)
-  }
 
-  /** Run-once marker of the `*_exec` keys: `run` executes on the first
-    * call per session and returns the schema of the files it wrote; the
-    * marker (a session conf) keeps that schema, so every call reads the
-    * files back with it and launches no schema-inference job.
+  /** The run-once seam of the `*_exec` keys: `build` runs through
+    * `graft.Session.once` (first call per session and source dir, with
+    * `graft.Session.scratch(name)` wiped and passed in) and returns the
+    * schema of the parquet files it left at `<scratch>/<out>`. The marker
+    * keeps that schema, so every call reads the files back with it and
+    * launches no schema-inference job.
     */
-  private def runOnce(spark: SparkSession, marker: String)(run: => StructType): StructType =
-    spark.conf.getOption(marker) match {
-      case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
-      case None =>
-        val schema = run
-        spark.conf.set(marker, schema.json)
-        schema
-    }
+  private def builtOnce(spark: SparkSession, dir: String, name: String, out: String)(
+      build: String => StructType): DataFrame = {
+    val base = graft.Session.scratch(name)
+    val json = graft.Session.once(spark, name, dir)(build(base).json)
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(s"$base/$out")
+  }
 
   /** q_stream_join_exec: a REAL stream-stream join execution under the
     * hash gate — the symmetric-hash-join state engine itself, the third
@@ -204,7 +198,7 @@ object Streaming {
     * — counting emitted pairs is the honest streaming form).
     */
   def streamJoinExec(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = runStreamOnceRaw(spark, dir, "graft_stream_join", "streamJoinExec", () => {
+    val pairs = runStreamOnceRaw(spark, dir, "stream_join", _ => {
       def side(idCol: String, tsCol: String, userCol: String) =
         eventsStream(spark, dir)
           .select(col("user_id").as(userCol), col("event_id").as(idCol),
@@ -236,7 +230,7 @@ object Streaming {
     * q_stream_sliding SQL.
     */
   def streamSlidingExec(spark: SparkSession, dir: String): DataFrame =
-    runStreamOnce(spark, dir, "graft_stream_sliding", "streamSlidingExec",
+    runStreamOnce(spark, dir, "stream_sliding",
       src => slidingOn(src), Seq(col("win_us"), col("event_type")))
 
   /** q_stream_dedup_exec: streaming DEDUPLICATION state under the hash
@@ -256,7 +250,7 @@ object Streaming {
     * shape where key state exceeds heap.
     */
   def streamDedupExec(spark: SparkSession, dir: String): DataFrame = {
-    val rows = runStreamOnceRaw(spark, dir, "graft_stream_dedup", "streamDedupExec", () => {
+    val rows = runStreamOnceRaw(spark, dir, "stream_dedup", _ => {
       def side = eventsStream(spark, dir)
         .select(col("event_id"), col("event_type"))
       side.unionByName(side).dropDuplicates("event_id")
@@ -281,7 +275,7 @@ object Streaming {
     * shared runStreamOnce harness (RocksDB state, wiped sink+checkpoint).
     */
   def streamSessionExec(spark: SparkSession, dir: String): DataFrame =
-    runStreamOnce(spark, dir, "graft_stream_sess", "streamSessionExec",
+    runStreamOnce(spark, dir, "stream_sess",
       src => src
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n_events"), max(us(col("ts"))).as("sess_end_us"))
@@ -315,7 +309,7 @@ object Streaming {
     * could hash.
     */
   def streamAsofExec(spark: SparkSession, dir: String): DataFrame =
-    runStreamOnceRaw(spark, dir, "graft_stream_asof", "streamAsofExec", () =>
+    runStreamOnceRaw(spark, dir, "stream_asof", _ =>
       asofStream(eventsStream(spark, dir)
         .withColumn("ts", col("ts").cast("timestamp"))))
       .orderBy(col("event_id"))
@@ -342,43 +336,19 @@ object Streaming {
     */
   def streamCdcExec(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.cents
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = sys.props("java.io.tmpdir") + s"/graft_stream_cdc_$tag"
-    val table = s"$base/table"
-    val schema = runOnce(spark, s"graft.streamCdcExec.done.$tag") {
-      val bp = new org.apache.hadoop.fs.Path(base)
-      val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(bp)) fs.delete(bp, true)
+    builtOnce(spark, dir, "stream_cdc", "table") { base =>
       val o = Sources.orders(spark, dir).select(
         col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
         cents(col("o_totalprice")).as("cents"))
       val changes = Seq(
-        1L -> o.filter(col("k") % 3 === 0),
-        2L -> o.filter(col("k") % 2 === 0).withColumn("cents", col("cents") + 100L),
-        3L -> o.filter(col("k") % 5 === 0).withColumn("cents", col("cents") * 2L)
-      ).map { case (s, df) => s -> df.withColumn("seq", lit(s)) }
-      val stageDir = new org.apache.hadoop.fs.Path(s"$base/stage")
-      fs.mkdirs(stageDir)
-      changes.foreach { case (s, df) =>
-        val tmp = s"$base/tmp$s"
-        df.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*")).head.getPath
-        val dst = new org.apache.hadoop.fs.Path(stageDir, f"c$s%02d.parquet")
-        fs.rename(part, dst)
-        fs.setTimes(dst, s * 60000L, -1)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
-      val stage = spark.readStream.schema(changes.head._2.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stageDir.toString)
-      val q = applyCdcStream(stage, table, Seq("k"), "seq", s"$base/ckpt")
-      try {
-        q.processAllAvailable()
-      } finally q.stop()
+        1 -> o.filter(col("k") % 3 === 0),
+        2 -> o.filter(col("k") % 2 === 0).withColumn("cents", col("cents") + 100L),
+        3 -> o.filter(col("k") % 5 === 0).withColumn("cents", col("cents") * 2L)
+      ).map { case (s, df) => s -> df.withColumn("seq", lit(s.toLong)) }
+      val stage = stageFiles(spark, base, changes)
+      drain(applyCdcStream(stage, s"$base/table", Seq("k"), "seq", s"$base/ckpt"))
       changes.head._2.schema
-    }
-    spark.read.schema(schema).parquet(table)
-      .select(col("k"), col("pri"), col("cents"), col("seq"))
+    }.select(col("k"), col("pri"), col("cents"), col("seq"))
       .orderBy(col("k"))
   }
 
@@ -415,58 +385,31 @@ object Streaming {
     * on the key), the directory-swap stand-in for the KV store a real
     * dashboard writes.
     */
-  def streamUpdateExec(spark: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = sys.props("java.io.tmpdir") + s"/graft_stream_update_$tag"
-    val table = s"$base/table"
-    val schema = runOnce(spark, s"graft.streamUpdateExec.done.$tag") {
-      val bp = new org.apache.hadoop.fs.Path(base)
-      val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(bp)) fs.delete(bp, true)
+  def streamUpdateExec(spark: SparkSession, dir: String): DataFrame =
+    builtOnce(spark, dir, "stream_update", "table") { base =>
       val ev = Sources.events(spark, dir)
         .select(col("ts").cast("timestamp").as("ts"),
                 col("event_type"), col("value"))
-      val src = stageTimeOrderedTerciles(spark, ev, base, fs)
-        .withWatermark("ts", "0 seconds")
-      val agg = tumblingOn(src)
+      val agg = tumblingOn(stageTimeOrderedTerciles(spark, ev, base)
+        .withWatermark("ts", "0 seconds"))
       graft.Session.withConfs(spark, rocksDbState) {
-        val q = agg.writeStream
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            if (!batch.isEmpty) {
-              val spark0 = batch.sparkSession
-              val p = new org.apache.hadoop.fs.Path(table)
-              val tfs = p.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-              val target =
-                if (tfs.exists(p)) spark0.read.schema(batch.schema).parquet(table) else batch.limit(0)
-              graft.io.Sinks.atomicOverwrite(
-                Merge.upsert(target, batch, Seq("win_us", "event_type")), table)
-            }
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        drain(foreachBatchQuery(agg, s"$base/ckpt", "update") { (batch, _) =>
+          if (!batch.isEmpty) upsertDir(batch, s"$base/table", Seq("win_us", "event_type"))
+        })
       }
       agg.schema
-    }
-    spark.read.schema(schema).parquet(table)
-      .select(col("win_us"), col("event_type"), col("n"), col("sum_value"))
+    }.select(col("win_us"), col("event_type"), col("n"), col("sum_value"))
       .orderBy(col("win_us"), col("event_type"))
-  }
 
   /** Stage `ev` (must carry a `ts` timestamp column) as three files cut
     * at exact event-time terciles (percentile_disc picks; equal-ts rows
     * stay in one file, so file k+1's min ts >= file k's max ts — the
-    * no-late-drops belt) with PINNED mtimes (the file source orders
-    * batches by modification time — the batch-order belt), and return
-    * the maxFilesPerTrigger=1 streaming reader over them: the shared
+    * no-late-drops belt) through [[stageFiles]]: the shared
     * multi-micro-batch determinism rig of q_stream_update_exec and
-    * q_stream_tws_exec (the q_stream_cdc_exec pattern, generalized).
+    * q_stream_tws_exec.
     */
   private def stageTimeOrderedTerciles(spark: SparkSession, ev: DataFrame,
-                                       base: String,
-                                       fs: org.apache.hadoop.fs.FileSystem): DataFrame = {
+                                       base: String): DataFrame = {
     val evc = reuse(ev) // cut probe + three filtered writes share one scan
     val evUs = evc.withColumn("__us", unix_micros(col("ts")))
     // percentile_disc returns DOUBLE; the picked value is an actual
@@ -479,16 +422,29 @@ object Streaming {
       1 -> evUs.filter(col("__us") <= q1),
       2 -> evUs.filter(col("__us") > q1 && col("__us") <= q2),
       3 -> evUs.filter(col("__us") > q2)).map { case (s, d) => s -> d.drop("__us") }
-    val stageDir = new org.apache.hadoop.fs.Path(s"$base/stage")
+    stageFiles(spark, base, parts)
+  }
+
+  /** Write each part `(n, df)` as ONE parquet file under `<base>/stage`
+    * with its mtime PINNED to n minutes (the file source orders batches
+    * by modification time — the batch-order belt), and return the
+    * maxFilesPerTrigger=1 streaming reader over them: one real
+    * micro-batch per part, in `n` order.
+    */
+  private def stageFiles(spark: SparkSession, base: String,
+                         parts: Seq[(Int, DataFrame)]): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val stageDir = new Path(s"$base/stage")
+    val fs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(stageDir)
     parts.foreach { case (s, df) =>
       val tmp = s"$base/tmp$s"
       df.coalesce(1).write.parquet(tmp)
-      val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*")).head.getPath
-      val dst = new org.apache.hadoop.fs.Path(stageDir, f"t$s%02d.parquet")
+      val part = fs.globStatus(new Path(s"$tmp/part-*")).head.getPath
+      val dst = new Path(stageDir, f"p$s%02d.parquet")
       fs.rename(part, dst)
       fs.setTimes(dst, s * 60000L, -1)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      fs.delete(new Path(tmp), true)
     }
     spark.readStream.schema(parts.head._2.schema)
       .option("maxFilesPerTrigger", 1)
@@ -519,15 +475,11 @@ object Streaming {
     */
   def streamTwsExec(spark: SparkSession, dir: String): DataFrame = {
     import graft.Det.cents
-    val sink = runStreamOnceRaw(spark, dir, "graft_stream_tws", "streamTwsExec", () => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = sys.props("java.io.tmpdir") + s"/graft_stream_tws_$tag"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sink = runStreamOnceRaw(spark, dir, "stream_tws", base => {
       val ev = Sources.events(spark, dir)
         .select(col("ts").cast("timestamp").as("ts"), col("user_id"),
                 cents(col("value")).as("cents"))
-      runningUserCentsTws(stageTimeOrderedTerciles(spark, ev, s"$base/rig", fs))
+      runningUserCentsTws(stageTimeOrderedTerciles(spark, ev, s"$base/rig"))
     })
     sink.groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("cents"))).as("m"))
@@ -685,11 +637,10 @@ object Streaming {
     * partitioning even when both sides are the same bucketed table.
     */
   def asofBucketedCatalog(spark: SparkSession, dir: String): DataFrame = {
-    val confKey = "graft.asof.bucketed.src"
     val T = "graft_ev.default.events_by_user"
     spark.conf.set("spark.sql.catalog.graft_ev", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    if (!spark.conf.getOption(confKey).contains(dir)) {
+    graft.Session.once(spark, "asof_bucketed", dir) {
       spark.sql(s"DROP TABLE IF EXISTS $T")
       spark.sql(s"""CREATE TABLE $T (event_id BIGINT, user_id BIGINT, us BIGINT, kind INT)
                     PARTITIONED BY (bucket(8, user_id))""")
@@ -701,7 +652,7 @@ object Streaming {
         .createOrReplaceTempView(src)
       spark.sql(s"INSERT INTO $T SELECT * FROM $src")
       spark.catalog.dropTempView(src)
-      spark.conf.set(confKey, dir)
+      ""
     }
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("kind"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -943,25 +894,56 @@ object Streaming {
     * body targets a transactional table format instead of rename.
     */
   def applyCdcStream(stage: DataFrame, tablePath: String, pk: Seq[String],
-                     seqCol: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+                     seqCol: String, checkpoint: String): StreamingQuery =
+    foreachBatchQuery(stage, checkpoint) { (batch, _) =>
+      upsertDir(latestPerKey(batch, pk, seqCol), tablePath, pk)
+    }
+
+  /** The directory-upsert sink: merge `batch` into the parquet table at
+    * `tablePath` (an empty frame of the batch's schema when none exists
+    * yet) with the Merge.upsert dataflow, then atomically replace the
+    * directory. Materialization order is safe: the merge plan reads the
+    * CURRENT table files while atomicOverwrite writes the staging dir;
+    * the rename happens only after the staged write completes.
+    */
+  private def upsertDir(batch: DataFrame, tablePath: String, pk: Seq[String]): Unit = {
+    val spark0 = batch.sparkSession
+    val p = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = p.getFileSystem(spark0.sparkContext.hadoopConfiguration)
+    val target =
+      if (fs.exists(p)) spark0.read.schema(batch.schema).parquet(tablePath) else batch.limit(0)
+    graft.io.Sinks.atomicOverwrite(Merge.upsert(target, batch, pk), tablePath)
+  }
+
+  /** The latest change per key within one micro-batch: `seqCol`
+    * descending, the Delta-style last-writer-wins convention.
+    */
+  private def latestPerKey(batch: DataFrame, pk: Seq[String], seqCol: String): DataFrame = {
+    val w = Window.partitionBy(pk.map(col): _*).orderBy(col(seqCol).desc)
+    batch.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** Start the foreachBatch query of `stage`: every graft foreachBatch
+    * sink starts here. A caller that runs the query to its end stops it
+    * through [[drain]].
+    */
+  private[graft] def foreachBatchQuery(stage: DataFrame, checkpoint: String,
+                                       outputMode: String = "append")(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     stage.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark0 = batch.sparkSession
-        val w = Window.partitionBy(pk.map(col): _*).orderBy(col(seqCol).desc)
-        val latest = batch.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        val p = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = p.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-        val target =
-          if (fs.exists(p)) spark0.read.schema(latest.schema).parquet(tablePath) else latest.limit(0)
-        // materialization order is safe: the merge plan reads the CURRENT
-        // table files while atomicOverwrite writes the staging dir; the
-        // rename happens only after the staged write completes
-        graft.io.Sinks.atomicOverwrite(Merge.upsert(target, latest, pk), tablePath)
-        ()
+      .outputMode(outputMode)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        body(batch, id)
       }
       .start()
+
+  /** Process everything available to `q`, then stop it — also when a
+    * batch fails.
+    */
+  private def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
 
   /** Continuous CDC apply into a TRANSACTIONAL GraftCatalog table — the
     * scale form of [[applyCdcStream]]: instead of rewriting a whole
@@ -976,30 +958,23 @@ object Streaming {
     * as in the directory variant.
     */
   def applyCdcStreamCatalog(stage: DataFrame, table: String, pk: Seq[String],
-                            seqCol: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stage.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // an EMPTY batch (recovery batch 0, idle-source ticks) must not
-        // commit: a burst of no-op snapshots would push real batch
-        // boundaries out of RETAIN-bounded retention and break the
-        // ChangeFeed audit contract
-        if (!batch.isEmpty) applyCdcBatch(batch, batchId, table, pk, seqCol)
-        ()
-      }
-      .start()
+                            seqCol: String, checkpoint: String): StreamingQuery =
+    foreachBatchQuery(stage, checkpoint) { (batch, batchId) =>
+      // an EMPTY batch (recovery batch 0, idle-source ticks) must not
+      // commit: a burst of no-op snapshots would push real batch
+      // boundaries out of RETAIN-bounded retention and break the
+      // ChangeFeed audit contract
+      if (!batch.isEmpty) applyCdcBatch(batch, batchId, table, pk, seqCol)
+    }
 
   /** One CDC micro-batch applied as ONE MERGE INTO commit — the batch
     * body of [[applyCdcStreamCatalog]], shared with the streaming
     * materialized view (catalog/IncrementalView.streamingMaterialize).
     */
-  private[graft] def applyCdcBatch(batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                                   batchId: Long, table: String,
+  private[graft] def applyCdcBatch(batch: DataFrame, batchId: Long, table: String,
                                    pk: Seq[String], seqCol: String): Unit = {
     val spark0 = batch.sparkSession
-    val w = Window.partitionBy(pk.map(col): _*).orderBy(col(seqCol).desc)
-    val latest = batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val latest = latestPerKey(batch, pk, seqCol)
     // UUID, not batchId: two concurrent streaming queries in one session
     // can reach the same batchId simultaneously, and a shared name would
     // let one stream's MERGE read the other's rows

@@ -294,7 +294,8 @@ object Text {
     * declared input is BOUNDED to a deterministic doc slice (the
     * q_dedup_minhash pattern) so no declared key is all-pairs over an
     * unbounded corpus. The subquadratic 100 TB path is the banded LSH form
-    * (dedupLshQuery / MinHash.candidatePairs) — run THAT on a full corpus.
+    * (lshScoredCandidates, declared as dedupLshQuery) — run THAT on a full
+    * corpus.
     */
   def dedupNgramQuery(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairs(Sources.documents(spark, dir).filter(col("doc_id") < 100),
@@ -360,8 +361,7 @@ object Text {
     * shape that holds at 100 TB: shuffle keys are (band_idx, 2×md5) pairs,
     * candidate work is proportional to collisions, and the quadratic exact
     * forms (q_dedup_ngram, q_sim_neardup) exist only as bounded ground
-    * truth. MinHash.candidatePairs is the faster in-engine xxhash64 twin
-    * of the same shape.
+    * truth.
     */
   def dedupLshQuery(spark: SparkSession, dir: String): DataFrame =
     lshScoredCandidates(spark, dir).orderBy(col("id_a"), col("id_b"))

@@ -1383,6 +1383,26 @@ class CatalogSpec extends AnyFunSuite with SparkFixture {
       s"expected a loud torn-file error, got: ${messages(e2).mkString(" | ")}")
     assert(java.util.Arrays.equals(Files.readAllBytes(dir.resolve("manifest")), manifestBefore),
       "a failed materialize_deletes must not change the live manifest")
+    def tmpFiles() = Files.list(tableDir()).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".tmp")).toList
+    assert(tmpFiles().isEmpty, s"a failed materialize_deletes left ${tmpFiles()}")
+    spark.sql("DROP TABLE graft_fb.default.fb_torn")
+
+    // compact byte-copies its members: a missing member fails the CALL,
+    // and the half-written merged file is not left behind
+    spark.sql("CREATE TABLE graft_fb.default.fb_torn (k BIGINT, v STRING)")
+    (0 until 3).foreach { i =>
+      spark.sql(s"INSERT INTO graft_fb.default.fb_torn SELECT id, 'g$i' FROM range(${i * 10}, ${i * 10 + 10})")
+    }
+    val groups = graft.catalog.GroupFiles.live(tableDir())
+    assert(groups.size >= 2, s"compact needs several groups, got ${groups.size}")
+    Files.delete(tableDir().resolve(groups.last.file))
+    val e3 = intercept[Exception] {
+      spark.sql("CALL graft_fb.system.compact('default.fb_torn', 1024)").collect()
+    }
+    assert(messages(e3).exists(_.contains(groups.last.file)),
+      s"expected the missing member to be named, got: ${messages(e3).mkString(" | ")}")
+    assert(tmpFiles().isEmpty, s"a failed compact left ${tmpFiles()}")
     spark.sql("DROP TABLE graft_fb.default.fb_torn")
   }
 

@@ -29,9 +29,10 @@ class ContractSpec extends AnyFunSuite with SparkFixture {
     assert(SparkEntry.runOnce("q_incremental_view"))
   }
 
-  /** The file name of every match of `call` in src/main/scala, once per match. */
-  private def mainSourceSites(call: scala.util.matching.Regex): List[String] = {
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+  /** The file name of every match of `call` under `root`, once per match. */
+  private def mainSourceSites(call: scala.util.matching.Regex,
+                              root: String = "src/main/scala"): List[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     finally files.close()
   }.flatMap { f =>
@@ -51,6 +52,54 @@ class ContractSpec extends AnyFunSuite with SparkFixture {
     // the one policy (reuse vs snapshot) and its one doc
     val sites = mainSourceSites("""localCheckpoint\(|\.checkpoint\(""".r)
     assert(sites.distinct === List("Materialize.scala"), s"checkpoint call sites: $sites")
+  }
+
+  test("src/main/scala/graft/ops keeps run-once state only through Session.once and Session.scratch") {
+    // a marker or scratch path built by hand escapes the one rebuild
+    // rule: another source dir wipes the scratch dir, builds, then marks
+    val banned = Seq("java.io.tmpdir", "conf.getOption(", "replaceAll(\"[^A-Za-z0-9]\"")
+      .map(java.util.regex.Pattern.quote).mkString("|").r
+    val sites = mainSourceSites(banned, "src/main/scala/graft/ops")
+    assert(sites.isEmpty, s"run-once state built by hand in: $sites")
+  }
+
+  test("Session.once builds once per session and source dir") {
+    var builds = 0
+    def call(dir: String) = Session.once(spark, "spec_once_count", dir) { builds += 1; "p" }
+    call("/src/a"); call("/src/a"); call("/src/a")
+    assert(builds === 1)
+  }
+
+  test("Session.once rebuilds on another dir, wiping its scratch dir first") {
+    var builds = 0
+    def call(dir: String) = Session.once(spark, "spec_once_dir", dir) { builds += 1; dir }
+    call("/src/a")
+    val stale = java.nio.file.Paths.get(Session.scratch("spec_once_dir"), "stale")
+    java.nio.file.Files.createDirectories(stale.getParent)
+    java.nio.file.Files.write(stale, Array[Byte](1))
+    assert(call("/src/b") === "/src/b")
+    assert(builds === 2)
+    assert(!java.nio.file.Files.exists(stale), "a rebuild must start from an empty scratch dir")
+    call("/src/b")
+    assert(call("/src/a") === "/src/a" && builds === 3)
+  }
+
+  test("Session.once returns the payload of the build on every call") {
+    val payload = """{"type":"struct","fields":[]}"""
+    assert(Session.once(spark, "spec_once_payload", "/src/a")(payload) === payload)
+    assert(Session.once(spark, "spec_once_payload", "/src/a")("never built") === payload)
+    // a dir that is a prefix of the stored dir plus payload is another dir
+    assert(Session.once(spark, "spec_once_payload", "/src/")("other") === "other")
+  }
+
+  test("Session.once sets no marker when the build throws, so the next call builds") {
+    intercept[IllegalStateException] {
+      Session.once(spark, "spec_once_fail", "/src/a")(throw new IllegalStateException("boom"))
+    }
+    assert(spark.conf.getOption("graft.once.spec_once_fail").isEmpty)
+    var builds = 0
+    assert(Session.once(spark, "spec_once_fail", "/src/a") { builds += 1; "ok" } === "ok")
+    assert(builds === 1)
   }
 
   test("every key follows the q_ naming convention") {

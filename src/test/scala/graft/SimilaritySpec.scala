@@ -78,16 +78,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(pairs.forall(_.getDouble(2) >= 0.999999))
   }
 
-  test("simHash: identical token lists collide; hamming distance sane") {
-    val docs = Sources.documents(spark, sfDir).limit(50)
-      .select(col("doc_id"), graft.ops.Text.tokens(col("text")).as("toks"))
-    val sh = docs.select(col("doc_id"), Similarity.simHash(col("toks")).as("sig"))
-    val j = sh.as("a").join(sh.as("b"), col("a.doc_id") === col("b.doc_id"))
-      .select(Similarity.hamming(col("a.sig"), col("b.sig")).as("h"))
-      .collect().map(_.getLong(0))
-    assert(j.forall(_ === 0))
-  }
-
   test("simPairsQuery: exact pair mining agrees with the LSH path at sim=1 recall") {
     val rows = Similarity.simPairsQuery(spark, sfDir).collect()
     assert(rows.forall(r => r.getLong(0) < r.getLong(1)))

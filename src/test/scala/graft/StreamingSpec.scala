@@ -521,9 +521,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // the run must have consumed MULTIPLE real micro-batches (three staged
     // files at maxFilesPerTrigger=1), not one coalesced pass — count the
     // committed batch ids in the checkpoint
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val commits = new java.io.File(
-      sys.props("java.io.tmpdir") + s"/graft_stream_update_$tag/ckpt/commits")
+    val commits = new java.io.File(Session.scratch("stream_update") + "/ckpt/commits")
     val n = commits.listFiles().count(_.getName.forall(_.isDigit))
     assert(n >= 3, s"expected >= 3 committed micro-batches, saw $n")
   }
@@ -539,14 +537,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // cross-batch accumulation really happened: the sink's per-user rows
     // are strict running prefixes — n strictly increasing, cents = the
     // cumulative sum at that n — and >= 3 micro-batches committed
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val sink = spark.read.parquet(
-      sys.props("java.io.tmpdir") + s"/graft_stream_tws_$tag/sink")
+    val sink = spark.read.parquet(Session.scratch("stream_tws") + "/sink")
     assert(sink.count() > finals.count(), "no user emitted more than one running row")
     val dupN = sink.groupBy("user_id", "n").count().filter(col("count") > 1).count()
     assert(dupN === 0, "duplicate running row for a (user, n)")
-    val commits = new java.io.File(
-      sys.props("java.io.tmpdir") + s"/graft_stream_tws_$tag/ckpt/commits")
+    val commits = new java.io.File(Session.scratch("stream_tws") + "/ckpt/commits")
     val nb = commits.listFiles().count(_.getName.forall(_.isDigit))
     assert(nb >= 3, s"expected >= 3 committed micro-batches, saw $nb")
   }
@@ -682,9 +677,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(got === want)
     assert(got.nonEmpty && got.exists(_._4 == 3L) && got.exists(_._4 == 1L))
     // the checkpoint proves the multi-batch path ran: >= 3 offset commits
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val off = new java.io.File(
-      sys.props("java.io.tmpdir") + s"/graft_stream_cdc_$tag/ckpt/offsets")
+    val off = new java.io.File(Session.scratch("stream_cdc") + "/ckpt/offsets")
     assert(off.isDirectory &&
       off.list().count(f => !f.startsWith(".")) >= 3,
       s"expected >= 3 micro-batch offsets in $off")
